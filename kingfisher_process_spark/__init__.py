@@ -3,7 +3,7 @@ query and data-processing capabilities of open-contracting/kingfisher-process.
 
 Brand-new Spark-first design (NOT a port): relational envelope tables stored
 as parquet, JSON payloads kept as raw canonical strings (decimal-faithful),
-the OCDS compile step as a groupBy-applyInPandas merge, and an analyst SQL
+the OCDS compile step as one arrow group walk per OCID, and an analyst SQL
 surface served by Spark SQL / Catalyst.
 
 Reference behavior citations in docstrings point into the public reference

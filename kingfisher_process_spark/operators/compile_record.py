@@ -2,7 +2,8 @@
 reference's decision ladder (record_compiler.py:50-143; note matrix
 docs/database.rst:193-257).
 
-Ladder, per OCID (applied inside applyInPandas per group):
+Ladder, per OCID (applied per group by the arrow group walk,
+operators/grouped.grouped_apply_sorted_arrow):
 
 1. duplicate OCIDs → WARNING DuplicateOCIDWarning, first record by id wins
 2. classify embedded releases: dated / undated / linked / tagged-'compiled'
@@ -18,14 +19,13 @@ from __future__ import annotations
 import json
 from decimal import Decimal
 
-import pandas as pd
 from pyspark.sql import functions as F
 
 from kingfisher_process_spark.operators import merge as merge_mod
-from kingfisher_process_spark.operators.compile_release import COMPILED_SCHEMA, persist_compiled
+from kingfisher_process_spark.operators.compile_release import (
+    COMPILED_SCHEMA, compiled_rows, persist_compiled)
 from kingfisher_process_spark.operators.grouped import grouped_apply_sorted_arrow
 from kingfisher_process_spark.store import Store
-from kingfisher_process_spark.util import canonical_json, md5_hex
 
 
 def is_linked_release(release: dict, maximum_properties: int = 4) -> bool:
@@ -34,34 +34,9 @@ def is_linked_release(release: dict, maximum_properties: int = 4) -> bool:
     return isinstance(release, dict) and "url" in release and len(release) <= maximum_properties
 
 
-def _rows_for(ocid, merged_json=None, release_date=None, notes=()):
-    rows = []
-    if merged_json is not None:
-        rows.append({
-            "row_kind": "item", "ocid": ocid, "merged": merged_json,
-            "release_date": release_date or "", "hash_md5": md5_hex(merged_json),
-            "note_code": None, "note": None, "note_data": None,
-        })
-    for code, text, data in notes:
-        rows.append({
-            "row_kind": "note", "ocid": ocid, "merged": None,
-            "release_date": None, "hash_md5": None,
-            "note_code": code, "note": text, "note_data": data,
-        })
-    return rows
-
-
-def _compile_record_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("record_id", kind="stable")
-    rows = _compile_record_rows_core(
-        pdf["ocid"].iloc[0], len(pdf), pdf["data"].iloc[0],
-        pdf["package_data"].iloc[0])
-    return pd.DataFrame(rows, columns=[f.name for f in COMPILED_SCHEMA.fields])
-
-
 def _compile_record_rows(cols: dict[str, list]) -> list[dict]:
-    """Arrow-walk twin of _compile_record_group (r13): one OCID group as
-    plain column lists; delegates to the same decision-ladder core."""
+    """One OCID group as plain column lists → COMPILED_SCHEMA rows: the
+    lowest ``record_id`` wins, its record runs the decision ladder."""
     order = sorted(range(len(cols["record_id"])),
                    key=lambda i: (cols["record_id"][i] is None,
                                   cols["record_id"][i] or 0))
@@ -98,9 +73,6 @@ def _compile_record_rows_core(ocid, n_records: int, data_raw,
         if isinstance(release.get("tag"), list) and "compiled" in release["tag"]:
             tagged.append(release)
 
-    def finish(rows):
-        return rows
-
     if dated and not linked:
         if undated:
             notes.append((
@@ -114,17 +86,14 @@ def _compile_record_rows_core(ocid, n_records: int, data_raw,
         except TypeError as e:
             notes.append(("ERROR", f"OCID {ocid} has missing/invalid date.",
                           json.dumps(str(e))))
-            return finish(_rows_for(ocid, notes=notes))
+            return compiled_rows(ocid, None, notes)
         extensions = set()
         exts = package.get("extensions")
         if isinstance(exts, list):
             extensions = {e for e in exts if isinstance(e, str)}
         merged, merge_notes = merge_mod.compile_releases(ocid, dated, extensions, rules)
         notes.extend(n.as_tuple() for n in merge_notes)
-        if merged is not None:
-            mjson = canonical_json(merged)
-            return finish(_rows_for(ocid, mjson, merged.get("date") or "", notes))
-        return finish(_rows_for(ocid, notes=notes))
+        return compiled_rows(ocid, merged, notes)
 
     ladder: list[str] = []
     if linked:
@@ -141,8 +110,7 @@ def _compile_record_rows_core(ocid, n_records: int, data_raw,
         ladder.append("Its compiledRelease was used.")
         level = "INFO" if linked == len(dated) == len(releases) > 0 else "WARNING"
         notes.append((level, "\n".join(ladder), None))
-        mjson = canonical_json(compiled_release)
-        return finish(_rows_for(ocid, mjson, compiled_release.get("date") or "", notes))
+        return compiled_rows(ocid, compiled_release, notes)
 
     if tagged:
         if len(tagged) > 1:
@@ -150,12 +118,11 @@ def _compile_record_rows_core(ocid, n_records: int, data_raw,
         else:
             ladder.append("Its only release tagged 'compiled' was used.")
         notes.append(("WARNING", "\n".join(ladder), None))
-        mjson = canonical_json(tagged[0])
-        return finish(_rows_for(ocid, mjson, tagged[0].get("date") or "", notes))
+        return compiled_rows(ocid, tagged[0], notes)
 
     ladder.append("It has no compiledRelease and no releases tagged 'compiled'. It was not compiled.")
     notes.append(("ERROR", "\n".join(ladder), None))
-    return finish(_rows_for(ocid, notes=notes))
+    return compiled_rows(ocid, None, notes)
 
 
 def compile_records(store: Store, parent_id: int, compiled_collection_id: int) -> dict:

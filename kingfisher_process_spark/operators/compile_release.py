@@ -2,12 +2,14 @@
 OCID and merge each group (reference: process/processors/compiler.py:21-84).
 
 Spark-first shape: ``releases ⋈ data ⋈ package_data`` (payload joins pruned
-to the parent collection's partition) → ``groupBy("ocid").applyInPandas``
-running the pure-Python merge engine per group. The groupBy shuffle is the
-only wide dependency; AQE skew handling covers hot OCIDs (thousands of
-releases per OCID — reference issue #460, compiler.py:61-62). Within a
-group, releases sort by ``release_date`` (text, lexicographic — reference
-ORDER BY semantics, compiler.py:57).
+to the parent collection's partition) → ``merged_by_ocid``: one arrow group
+walk (operators/grouped.grouped_apply_sorted_arrow) running the pure-Python
+merge engine per OCID. Its hash shuffle on ``ocid`` is the only wide
+dependency. Hot OCIDs (more than ``merge_partial.BATCH`` releases —
+reference issue #460, compiler.py:61-62) route through the two-phase
+merge, whose grouped steps run through the same walk. Within a group,
+releases sort by ``release_date`` (text, lexicographic — reference ORDER
+BY semantics, compiler.py:57).
 """
 
 from __future__ import annotations
@@ -15,8 +17,8 @@ from __future__ import annotations
 import json
 import threading
 from decimal import Decimal
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -38,6 +40,29 @@ COMPILED_SCHEMA = T.StructType([
 ])
 
 
+def compiled_rows(ocid, merged: dict | None, notes) -> list[dict]:
+    """COMPILED_SCHEMA rows for one OCID: an item row carrying the
+    canonical JSON of ``merged`` (when there is one), then one note row
+    per ``(code, text, data)`` — the single row builder of every compile
+    path (single-phase, two-phase finalize, record compile)."""
+    rows = []
+    if merged is not None:
+        mjson = canonical_json(merged)
+        rows.append({
+            "row_kind": "item", "ocid": ocid, "merged": mjson,
+            "release_date": merged.get("date") or "",
+            "hash_md5": md5_hex(mjson),
+            "note_code": None, "note": None, "note_data": None,
+        })
+    for code, text, data in notes:
+        rows.append({
+            "row_kind": "note", "ocid": ocid, "merged": None,
+            "release_date": None, "hash_md5": None,
+            "note_code": code, "note": text, "note_data": data,
+        })
+    return rows
+
+
 def _extensions_from_metadata(raw_packages) -> set[str]:
     """Union of extension URLs declared across an iterable of raw package-
     metadata JSON strings (the group-level set all compile paths must
@@ -45,6 +70,8 @@ def _extensions_from_metadata(raw_packages) -> set[str]:
     from this ONE function so their semantics cannot drift)."""
     extensions: set[str] = set()
     for raw in raw_packages:
+        if raw is None:
+            continue
         try:
             meta = json.loads(raw)
         except ValueError:
@@ -55,71 +82,44 @@ def _extensions_from_metadata(raw_packages) -> set[str]:
     return extensions
 
 
-def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    # single-param: applyInPandas signature inspection must pick f(pdf)
-    return _merge_group_impl(pdf, None)
+def _release_order(rds: list, datas: list) -> list[int]:
+    """Group row indices in merge order: ``release_date``, then the raw
+    payload as tiebreak. The tiebreak makes same-date merge order
+    DETERMINISTIC: shuffle arrival order is not stable across recomputes
+    (Spark recaches plans that read a path which was appended to
+    mid-stage), and an unstable tie order changes the merged hash
+    between the payload write and the id-mapping read. None sorts LAST
+    in both keys."""
+    return sorted(range(len(datas)),
+                  key=lambda i: (rds[i] is None, rds[i] or "",
+                                 datas[i] is None, datas[i] or ""))
 
 
-def _merge_group_rows_impl(cols: dict[str, list],
-                           extension_schemas: dict[str, dict] | None
-                           ) -> list[dict]:
-    """Rows-native merge core (r13): one OCID group arrives as plain
-    Python column lists, rows of COMPILED_SCHEMA come back as dicts.
-    This is the whole merge — the pandas wrapper below and the arrow
-    group walk (grouped_apply_sorted_arrow) both delegate here, so the
-    two dispatch shapes cannot drift semantically."""
+def _merge_rows(cols: dict[str, list],
+                extension_schemas: dict[str, dict] | None) -> list[dict]:
+    """Single-phase merge of one OCID group: plain Python column lists
+    in, COMPILED_SCHEMA row dicts out."""
     # with local extension schemas the rules depend on this group's
     # extension set — let compile_releases derive (memoized) patched rules
     rules = None if extension_schemas else merge_mod.load_rules()
     ocid = cols["ocid"][0]
-    rds, datas = cols["release_date"], cols["data"]
-    # the payload tiebreak makes same-date merge order DETERMINISTIC:
-    # shuffle arrival order is not stable across recomputes (Spark
-    # recaches plans that read a path which was appended to mid-stage),
-    # and an unstable tie order changes the merged hash between the
-    # payload write and the id-mapping read. None sorts LAST in both
-    # keys — the same na_position='last' order pandas sort_values gave
-    # the original wrapper.
-    order = sorted(range(len(datas)),
-                   key=lambda i: (rds[i] is None, rds[i] or "",
-                                  datas[i] is None, datas[i] or ""))
-    releases = [json.loads(datas[i], parse_float=Decimal) for i in order]
-    extensions = _extensions_from_metadata(
-        dict.fromkeys(p for p in cols["package_data"] if p is not None))
-
+    datas = cols["data"]
+    releases = [json.loads(datas[i], parse_float=Decimal)
+                for i in _release_order(cols["release_date"], datas)]
+    extensions = _extensions_from_metadata(set(cols["package_data"]))
     merged, notes = merge_mod.compile_releases(
         ocid, releases, extensions, rules, extension_schemas)
-    rows = []
-    if merged is not None:
-        mjson = canonical_json(merged)
-        rows.append({
-            "row_kind": "item", "ocid": ocid, "merged": mjson,
-            "release_date": merged.get("date") or "",
-            "hash_md5": md5_hex(mjson),
-            "note_code": None, "note": None, "note_data": None,
-        })
-    for n in notes:
-        code, text, data = n.as_tuple()
-        rows.append({
-            "row_kind": "note", "ocid": ocid, "merged": None,
-            "release_date": None, "hash_md5": None,
-            "note_code": code, "note": text, "note_data": data,
-        })
-    return rows
+    return compiled_rows(ocid, merged, [n.as_tuple() for n in notes])
 
 
-def _merge_rows_fn(extension_schemas: dict[str, dict] | None = None):
-    """fn_rows closure for grouped_apply_sorted_arrow."""
-    def fn_rows(cols: dict[str, list]) -> list[dict]:
-        return _merge_group_rows_impl(cols, extension_schemas)
-    return fn_rows
-
-
-def _merge_group_impl(pdf: pd.DataFrame,
-                      extension_schemas: dict[str, dict] | None) -> pd.DataFrame:
-    rows = _merge_group_rows_impl(
-        {c: pdf[c].tolist() for c in pdf.columns}, extension_schemas)
-    return pd.DataFrame(rows, columns=[f.name for f in COMPILED_SCHEMA.fields])
+def merged_by_ocid(inputs: DataFrame,
+                   extension_schemas: dict[str, dict] | None = None
+                   ) -> DataFrame:
+    """Single-phase compile of (ocid, release_date, data, package_data)
+    rows into COMPILED_SCHEMA: one arrow group walk keyed on ``ocid``."""
+    return grouped_apply_sorted_arrow(
+        inputs, ["ocid"], partial(_merge_rows, extension_schemas=extension_schemas),
+        COMPILED_SCHEMA, extra_sort=["release_date", "data"])
 
 
 def compile_collection(store: Store, parent_id: int, compiled_collection_id: int,
@@ -198,9 +198,7 @@ def compile_collection(store: Store, parent_id: int, compiled_collection_id: int
         compiled = two_phase_compiled(inputs, batch, extension_schemas,
                                       temp_caches=temp)
     else:
-        compiled = grouped_apply_sorted_arrow(
-            inputs, ["ocid"], _merge_rows_fn(extension_schemas),
-            COMPILED_SCHEMA, extra_sort=["release_date", "data"])
+        compiled = merged_by_ocid(inputs, extension_schemas)
     try:
         # persist_compiled is the materialization point: phase-A caches
         # registered in `temp` fill during it and release right after —
@@ -284,11 +282,11 @@ def skew_routed_compiled(inputs: DataFrame, batch: int | None = None,
     package_data) input — the ONE implementation of the two_phase="auto"
     decision (``compile_collection`` delegates here): OCIDs with more
     than ``batch`` releases merge through the two-phase partial path
-    (parallel phase-A batches), everything else in ONE ``applyInPandas``
-    pass. The hot set is a column-pruned count agg (only ``ocid`` is
-    read), resolved once through ``_resolve_keyset`` into a broadcast
-    probe for the semi/anti joins, so the cold majority pays zero
-    two-phase overhead. ``temp_caches`` forwards to two_phase_compiled
+    (parallel phase-A batches), everything else in ONE group walk
+    (``merged_by_ocid``). The hot set is a column-pruned count agg (only
+    ``ocid`` is read), resolved once through ``_resolve_keyset`` into a
+    broadcast probe for the semi/anti joins, so the cold majority pays
+    zero two-phase overhead. ``temp_caches`` forwards to two_phase_compiled
     — callers with a materialization point pass a list and unpersist
     after it.
 
@@ -298,7 +296,6 @@ def skew_routed_compiled(inputs: DataFrame, batch: int | None = None,
     from kingfisher_process_spark.operators import merge_partial as mp
 
     limit = batch or mp.BATCH
-    merge_rows = _merge_rows_fn(extension_schemas)
     if hot is None:
         hot = (
             inputs.groupBy("ocid").agg(F.count(F.lit(1)).alias("n"))
@@ -310,23 +307,13 @@ def skew_routed_compiled(inputs: DataFrame, batch: int | None = None,
     # gate), and nothing stays persisted after this returns
     hot, hot_small = _resolve_keyset(hot)
     if hot is None:
-        return grouped_apply_sorted_arrow(
-            inputs, ["ocid"], merge_rows, COMPILED_SCHEMA,
-            extra_sort=["release_date", "data"])
+        return merged_by_ocid(inputs, extension_schemas)
     probe = F.broadcast(hot) if hot_small else hot
     cold = inputs.join(probe, "ocid", "left_anti")
     hot_in = inputs.join(probe, "ocid", "left_semi")
-    return grouped_apply_sorted_arrow(
-        cold, ["ocid"], merge_rows, COMPILED_SCHEMA,
-        extra_sort=["release_date", "data"],
-    ).unionAll(two_phase_compiled(hot_in, batch, extension_schemas,
-                                  temp_caches=temp_caches))
-
-
-def _bind_schemas(fn, extension_schemas):
-    def wrapped(pdf: pd.DataFrame) -> pd.DataFrame:
-        return fn(pdf, extension_schemas)
-    return wrapped
+    return merged_by_ocid(cold, extension_schemas).unionAll(
+        two_phase_compiled(hot_in, batch, extension_schemas,
+                           temp_caches=temp_caches))
 
 
 PARTIAL_SCHEMA = T.StructType([
@@ -336,60 +323,71 @@ PARTIAL_SCHEMA = T.StructType([
     T.StructField("extensions", T.StringType()),
     T.StructField("incomposable", T.BooleanType()),
 ])
+EXTENSION_UNION_SCHEMA = T.StructType([
+    T.StructField("ocid", T.StringType()),
+    T.StructField("group_extensions", T.StringType()),
+])
 
 
-def _build_partial_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    return _build_partial_group_impl(pdf, None)
+def _extension_union_rows(cols: dict[str, list]) -> list[dict]:
+    """Per-OCID extension union over the group's distinct package
+    metadata — the same extraction ``_merge_rows`` performs, hoisted
+    above the salt split so every phase-A batch sees the group-level
+    set."""
+    extensions = _extensions_from_metadata(set(cols["package_data"]))
+    return [{"ocid": cols["ocid"][0],
+             "group_extensions": json.dumps(sorted(extensions))}]
 
 
-def _build_partial_group_impl(pdf: pd.DataFrame,
-                              extension_schemas: dict[str, dict] | None
-                              ) -> pd.DataFrame:
+def _local_schemas(extension_schemas: dict[str, dict] | None,
+                   extensions: set[str]) -> dict[str, dict]:
+    return {u: s for u, s in (extension_schemas or {}).items() if u in extensions}
+
+
+def _partial_rows(cols: dict[str, list],
+                  extension_schemas: dict[str, dict] | None) -> list[dict]:
+    """Phase A: pre-merge one (ocid, salt) batch into a partial."""
     from kingfisher_process_spark.operators import merge_partial as mp
 
-    # same deterministic tiebreak as _merge_group / the phase-A window
-    pdf = pdf.sort_values(["release_date", "data"], kind="stable")
-    releases = [json.loads(s, parse_float=Decimal) for s in pdf["data"]]
-    if "group_extensions" in pdf.columns:
+    datas = cols["data"]
+    # same deterministic tiebreak as _merge_rows / the phase-A window
+    releases = [json.loads(datas[i], parse_float=Decimal)
+                for i in _release_order(cols["release_date"], datas)]
+    if "group_extensions" in cols:
         # OCID-level union, computed pre-salt (two_phase_compiled): a
         # batch must build its partial with the rules of the WHOLE
         # group's extension set, not just the extensions its own rows'
         # packages declare — otherwise a partial can id-merge an array
         # the group's extension marks wholeListMerge (or vice versa) and
         # two-phase diverges from single-phase
-        extensions = set(json.loads(pdf["group_extensions"].iloc[0]))
+        extensions = set(json.loads(cols["group_extensions"][0]))
     else:
-        extensions = _extensions_from_metadata(pdf["package_data"].dropna().unique())
+        extensions = _extensions_from_metadata(set(cols["package_data"]))
     extensions = set(merge_mod.expand_extension_deps(extensions))
-    local = {u: s for u, s in (extension_schemas or {}).items() if u in extensions}
-    partial = mp.build_partial(releases, merge_mod.rules_with_extensions(local))
-    return pd.DataFrame([{
-        "ocid": pdf["ocid"].iloc[0],
-        "salt": int(pdf["salt"].iloc[0]),
-        "partial": canonical_json(partial),
+    local = _local_schemas(extension_schemas, extensions)
+    built = mp.build_partial(releases, merge_mod.rules_with_extensions(local))
+    return [{
+        "ocid": cols["ocid"][0],
+        "salt": int(cols["salt"][0]),
+        "partial": canonical_json(built),
         "extensions": json.dumps(sorted(extensions)),
-        "incomposable": bool(partial.get("incomposable")),
-    }])
+        "incomposable": bool(built.get("incomposable")),
+    }]
 
 
-def _finalize_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    return _finalize_group_impl(pdf, None)
-
-
-def _finalize_group_impl(pdf: pd.DataFrame,
-                         extension_schemas: dict[str, dict] | None
-                         ) -> pd.DataFrame:
-    from kingfisher_process_spark.operators import merge as merge_mod
+def _finalize_rows(cols: dict[str, list],
+                   extension_schemas: dict[str, dict] | None) -> list[dict]:
+    """Phase B: compose one OCID's partials, which the walk delivers in
+    ``salt`` order, into COMPILED_SCHEMA rows."""
     from kingfisher_process_spark.operators import merge_partial as mp
 
-    ocid = pdf["ocid"].iloc[0]
-    pdf = pdf.sort_values("salt")
-    partials = [json.loads(s, parse_float=Decimal) for s in pdf["partial"]]
+    ocid = cols["ocid"][0]
+    partials = [json.loads(s, parse_float=Decimal) for s in cols["partial"]]
     extensions: set[str] = set()
-    for raw in pdf["extensions"]:
+    for raw in cols["extensions"]:
         extensions.update(json.loads(raw))
     extensions = set(merge_mod.expand_extension_deps(extensions))
-    local = {u: s for u, s in (extension_schemas or {}).items() if u in extensions}
+    local = _local_schemas(extension_schemas, extensions)
 
     notes = []
     for url in sorted(extensions):
@@ -409,23 +407,7 @@ def _finalize_group_impl(pdf: pd.DataFrame,
                         "index": err.get("index")}),
         ))
     notes.extend(n.as_tuple() for n in warnings)
-
-    rows = []
-    if merged is not None:
-        mjson = canonical_json(merged)
-        rows.append({
-            "row_kind": "item", "ocid": ocid, "merged": mjson,
-            "release_date": merged.get("date") or "",
-            "hash_md5": md5_hex(mjson),
-            "note_code": None, "note": None, "note_data": None,
-        })
-    for code, text, data in notes:
-        rows.append({
-            "row_kind": "note", "ocid": ocid, "merged": None,
-            "release_date": None, "hash_md5": None,
-            "note_code": code, "note": text, "note_data": data,
-        })
-    return pd.DataFrame(rows, columns=[f.name for f in COMPILED_SCHEMA.fields])
+    return compiled_rows(ocid, merged, notes)
 
 
 _UNOWNED_PHASE_A: list[DataFrame] = []  # ≤1 cached partials, ownerless calls
@@ -450,8 +432,10 @@ def two_phase_compiled(inputs: DataFrame, batch: int | None = None,
                        temp_caches: list | None = None) -> DataFrame:
     """Distributed two-phase merge: salt by date-rank, pre-merge each
     (ocid, salt) batch into a partial, reduce partials per OCID. The
-    phase-A window streams rows JVM-side (no group materialization); the
-    phase-B group holds #partials × document-size, not #releases ×
+    phase-A window streams rows JVM-side (no group materialization);
+    phase A's group walk is keyed on ``(ocid, salt)``, so it shuffles on
+    both columns and a hot OCID's batches pre-merge in parallel tasks.
+    The phase-B group holds #partials × document-size, not #releases ×
     release-size. Incomposable OCIDs (a reset inside an id-less array
     entry) fall back to the single-phase path."""
     from pyspark.sql import Window
@@ -460,7 +444,7 @@ def two_phase_compiled(inputs: DataFrame, batch: int | None = None,
 
     batch = batch or mp.BATCH
     # "data" tiebreak: deterministic batch boundaries for same-date
-    # releases (recompute-stable — see _merge_group)
+    # releases (recompute-stable — see _release_order)
     w = Window.partitionBy("ocid").orderBy("release_date", "data")
     salted = inputs.withColumn(
         "salt", ((F.row_number().over(w) - F.lit(1)) / batch).cast("int"))
@@ -469,21 +453,15 @@ def two_phase_compiled(inputs: DataFrame, batch: int | None = None,
         # union it once per OCID before salting (Python-parsed with the
         # exact semantics of the single-phase path) and hand every batch
         # the same set. Distinct (ocid, package_data) pairs keep the
-        # pre-pass tiny (package metadata is deduplicated); the join is
-        # ocid-keyed, co-partitioned with the salting window's shuffle.
-        ocid_exts = (
-            inputs.select("ocid", "package_data").distinct()
-            .groupBy("ocid")
-            .applyInPandas(_ocid_extension_union,
-                           "ocid string, group_extensions string")
-        )
+        # pre-pass tiny (package metadata is deduplicated).
+        ocid_exts = grouped_apply_sorted_arrow(
+            inputs.select("ocid", "package_data").distinct(), ["ocid"],
+            _extension_union_rows, EXTENSION_UNION_SCHEMA)
         salted = salted.join(ocid_exts, "ocid")
-    build = (_build_partial_group if extension_schemas is None else
-             _bind_schemas(_build_partial_group_impl, extension_schemas))
-    final = (_finalize_group if extension_schemas is None else
-             _bind_schemas(_finalize_group_impl, extension_schemas))
-    partials = salted.groupBy("ocid", "salt").applyInPandas(
-        build, PARTIAL_SCHEMA)
+    partials = grouped_apply_sorted_arrow(
+        salted, ["ocid", "salt"],
+        partial(_partial_rows, extension_schemas=extension_schemas),
+        PARTIAL_SCHEMA, extra_sort=["release_date", "data"])
     if temp_caches is not None:
         # the caller owns a materialization point and unpersists after
         # it (compile_collection's try/finally): phase A runs ONCE —
@@ -519,27 +497,17 @@ def two_phase_compiled(inputs: DataFrame, batch: int | None = None,
     # driver-local broadcast probe, nothing persisted afterwards.
     bad, bad_small = _resolve_keyset(
         partials.where(F.col("incomposable")).select("ocid").distinct())
+    finalize = partial(_finalize_rows, extension_schemas=extension_schemas)
     if bad is None:
-        return partials.groupBy("ocid").applyInPandas(final, COMPILED_SCHEMA)
+        return grouped_apply_sorted_arrow(
+            partials, ["ocid"], finalize, COMPILED_SCHEMA, extra_sort=["salt"])
     probe = F.broadcast(bad) if bad_small else bad
-    good = partials.join(probe, "ocid", "left_anti")
-    compiled = good.groupBy("ocid").applyInPandas(final, COMPILED_SCHEMA)
-    fallback = (
-        inputs.join(probe, "ocid", "left_semi")
-        .groupBy("ocid")
-        .applyInPandas(
-            lambda pdf: _merge_group_impl(pdf, extension_schemas), COMPILED_SCHEMA)
-    )
+    compiled = grouped_apply_sorted_arrow(
+        partials.join(probe, "ocid", "left_anti"), ["ocid"], finalize,
+        COMPILED_SCHEMA, extra_sort=["salt"])
+    fallback = merged_by_ocid(inputs.join(probe, "ocid", "left_semi"),
+                              extension_schemas)
     return compiled.unionAll(fallback)
-
-
-def _ocid_extension_union(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-OCID extension union over the group's distinct package
-    metadata — the same extraction _merge_group_impl performs, hoisted
-    above the salt split so every batch sees the group-level set."""
-    extensions = _extensions_from_metadata(pdf["package_data"].dropna().unique())
-    return pd.DataFrame([{"ocid": pdf["ocid"].iloc[0],
-                          "group_extensions": json.dumps(sorted(extensions))}])
 
 
 def persist_compiled(store: Store, collection_id: int, compiled: DataFrame) -> dict:

@@ -1,103 +1,45 @@
-"""Batched per-group dispatch — ``groupBy(keys).applyInPandas(fn)`` semantics
-at ``mapInPandas`` cost.
+"""Batched per-group dispatch — grouped-map semantics (``groupBy(keys)``,
+one function call per group) at ``mapInArrow`` cost. Every OCDS compile
+(release merge, both phases of the two-phase merge, the extension-union
+pre-pass, record compile) runs through this one walk.
 
-Spark's ``applyInPandas`` crosses the JVM↔Python boundary once per GROUP:
-each group becomes its own Arrow batch and its own pandas DataFrame. For the
-compile workload that shape is pathological — the realistic OCDS
-distribution is millions of OCIDs with a handful of releases each
+Spark's grouped-map pandas UDF crosses the JVM↔Python boundary once per
+GROUP: each group becomes its own Arrow batch and its own pandas
+DataFrame. For the compile workload that shape is pathological — the
+realistic OCDS distribution is millions of OCIDs with a handful of
+releases each
 (reference compiler.py:57-65 streams ``itertools.groupby`` over a sorted
 cursor for exactly this reason), so per-group overhead dominates: measured
 9× slower than batched dispatch at 2k two-release groups.
 
-``grouped_apply_sorted`` keeps the same wide dependency (one hash shuffle
-on the keys) but moves the group iteration inside the Python worker: rows
-arrive sorted by key within each partition, ``mapInPandas`` walks whole
-Arrow batches, and a carry buffer stitches groups that span batch
-boundaries. Thousands of groups amortize one Arrow transfer. Hot groups
-behave exactly as under ``groupBy`` (all rows of a key hash to one
-partition) — route genuinely skewed keys through the two-phase merge
-(operators/merge_partial) as before.
+``grouped_apply_sorted_arrow`` keeps the same wide dependency (one hash
+shuffle on the keys) but moves the group iteration inside the Python
+worker: rows arrive sorted by key within each partition, ``mapInArrow``
+walks whole Arrow batches as plain Python column lists, and a carry
+buffer stitches groups that span batch boundaries. Thousands of groups
+amortize one Arrow transfer, and no pandas object is built per group.
+Hot groups behave exactly as under ``groupBy`` (all rows of a key hash to
+one partition) — genuinely skewed keys take the two-phase merge
+(operators/merge_partial), whose phase A keys the walk on ``(ocid,
+salt)`` so a hot OCID's batches hash to different partitions.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
+from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 
-def _tail_group_mask(pdf: pd.DataFrame, keys: Sequence[str]) -> pd.Series:
-    """True for rows belonging to the last (possibly batch-spanning) group."""
-    mask = pd.Series(True, index=pdf.index)
-    for k in keys:
-        last = pdf[k].iloc[-1]
-        col = pdf[k]
-        mask &= col.isna() if pd.isna(last) else (col == last)
-    return mask
-
-
-def iter_groups(batches, keys: Sequence[str],
-                fn: Callable[[pd.DataFrame], pd.DataFrame]):
-    """Walk key-sorted pandas batches, apply ``fn`` once per complete key
-    group. The last group of each batch may continue in the next batch, so
-    it is carried forward and stitched — the only stateful part, kept
-    module-level for direct property testing."""
-    carry: pd.DataFrame | None = None
-    for pdf in batches:
-        if carry is not None and len(carry):
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
-        if not len(pdf):
-            continue
-        tail = _tail_group_mask(pdf, keys)
-        carry = pdf[tail]
-        body = pdf[~tail]
-        if len(body):
-            outs = [fn(g) for _, g in
-                    body.groupby(list(keys), sort=False, dropna=False)]
-            yield pd.concat(outs, ignore_index=True)
-    if carry is not None and len(carry):
-        yield fn(carry)
-
-
-def grouped_apply_sorted(
-    df: DataFrame,
-    keys: Sequence[str],
-    fn: Callable[[pd.DataFrame], pd.DataFrame],
-    schema: T.StructType,
-    extra_sort: Sequence[str] = (),
-    n_parts: int | None = None,
-) -> DataFrame:
-    """Equivalent to ``df.groupBy(*keys).applyInPandas(fn, schema)`` for any
-    ``fn`` that doesn't depend on intra-group row order beyond
-    ``keys + extra_sort`` (every compile ``fn`` re-sorts internally anyway).
-
-    One shuffle (hash on ``keys``; explicit ``n_parts`` where the caller
-    knows the volume, else AQE-coalescible), partition-local sort, then a
-    single ``mapInPandas`` whose generator yields one output frame per
-    input Arrow batch.
-    """
-    keys = list(keys)
-    if n_parts:
-        rep = df.repartition(n_parts, *keys)
-    else:
-        rep = df.repartition(*keys)
-    rep = rep.sortWithinPartitions(*keys, *extra_sort)
-    return rep.mapInPandas(lambda batches: iter_groups(batches, keys, fn), schema)
-
-
 def iter_groups_rows(batches, keys: Sequence[str], fn_rows, out_schema):
-    """Arrow-native twin of ``iter_groups`` (r13, guide §4.5): walk
-    key-sorted ``pyarrow.RecordBatch``es, call ``fn_rows(cols)`` once per
-    complete key group with ``cols`` a dict of plain Python lists (the
-    group's column slices), expect a list of row dicts back, and emit one
-    output RecordBatch per input batch. Compared to the pandas walk this
-    skips, PER GROUP: the pandas sub-DataFrame slice, the one-row output
-    DataFrame construction, and the final pd.concat — measured 5.4x
-    faster on the 2000-group compile shape (scripts/r13_ab_merge.py).
-    Same carry-and-stitch contract for groups spanning batch boundaries."""
+    """Walk key-sorted ``pyarrow.RecordBatch``es, call ``fn_rows(cols)``
+    once per complete key group with ``cols`` a dict of plain Python
+    lists (the group's column slices), expect a list of row dicts back,
+    and emit one output RecordBatch per input batch. The last group of
+    each batch may continue in the next batch, so it is carried forward
+    and stitched — the only stateful part, kept module-level for direct
+    property testing."""
     import pyarrow as pa
 
     carry = None
@@ -143,22 +85,18 @@ def grouped_apply_sorted_arrow(
     fn_rows,
     schema: T.StructType,
     extra_sort: Sequence[str] = (),
-    n_parts: int | None = None,
 ) -> DataFrame:
-    """``grouped_apply_sorted`` with the arrow-native group walk:
-    ``fn_rows`` takes a dict of column-name → list-of-values for one
-    group and returns a list of output row dicts matching ``schema``.
-    Same single hash shuffle + partition-local sort; the Python side
-    never touches pandas."""
+    """Equivalent to a grouped map over ``df.groupBy(*keys)`` for any
+    function that doesn't depend on intra-group row order beyond
+    ``keys + extra_sort``: ``fn_rows`` takes a dict of column-name →
+    list-of-values for one group and returns a list of output row dicts
+    matching ``schema``. One (AQE-coalescible) hash shuffle on ``keys``,
+    a partition-local sort, then a single ``mapInArrow``."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     keys = list(keys)
     out_schema = to_arrow_schema(schema)
-    if n_parts:
-        rep = df.repartition(n_parts, *keys)
-    else:
-        rep = df.repartition(*keys)
-    rep = rep.sortWithinPartitions(*keys, *extra_sort)
+    rep = df.repartition(*keys).sortWithinPartitions(*keys, *extra_sort)
     return rep.mapInArrow(
         lambda batches: iter_groups_rows(batches, keys, fn_rows, out_schema),
         schema)

@@ -3,9 +3,9 @@ compiled release (reference: process/processors/compiler.py:135-177 using
 the public ocdsmerge semantics; golden behavior fixed by
 tests/processors/test_compiler.py:10-125).
 
-Pure Python, no Spark dependency: it runs inside ``applyInPandas`` per OCID
-group (see operators/compile_release.py). Merge rules are derived offline
-from the public OCDS 1.1.5 release schema (resources/merge_rules_1_1_5.json;
+Pure Python, no Spark dependency: it runs once per OCID group inside the
+arrow group walk (see operators/compile_release.py). Merge rules are derived
+offline from the public OCDS 1.1.5 release schema (resources/merge_rules_1_1_5.json;
 schema pinned by the reference at core/settings.py:269) so the engine is
 standalone — no network, no schema fetch at runtime.
 

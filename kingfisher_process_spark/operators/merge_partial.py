@@ -2,7 +2,7 @@
 watchlist #2; reference issue #460: thousands of releases per OCID,
 processors/compiler.py:61-65 holds one OCID in memory).
 
-``groupBy(ocid).applyInPandas`` materializes a whole group per task, so a
+A group walk keyed on ``ocid`` materializes a whole group per task, so a
 single hot OCID bounds compile parallelism and memory. Two-phase breaks
 the group: date-contiguous batches of releases pre-merge into PARTIALS in
 parallel (phase A), then one small reduce per OCID composes the partials

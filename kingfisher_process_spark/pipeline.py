@@ -328,7 +328,6 @@ def load_pending(spark: SparkSession, store: Store, root_id: int) -> dict:
 
 def close_and_process(spark: SparkSession, store: Store, root_id: int, *,
                       expected_files_count: int | None = None,
-                      two_phase_compile: bool | str = "auto",
                       extension_schemas: dict[str, dict] | str | None = None,
                       ) -> dict:
     """Close an open collection and run its deferred steps — the
@@ -378,7 +377,7 @@ def close_and_process(spark: SparkSession, store: Store, root_id: int, *,
         fmt = data_type["format"]
         if fmt == detect.RELEASE_PACKAGE:
             result["compile"] = compile_collection(
-                store, compile_parent, comp_id, two_phase=two_phase_compile,
+                store, compile_parent, comp_id,
                 extension_schemas=extension_schemas)
         elif fmt == detect.RECORD_PACKAGE:
             result["compile"] = compile_records(store, compile_parent, comp_id)

@@ -779,10 +779,11 @@ def ocds_compile_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-OCID compile through the production skew routing
     (skew_routed_compiled — the same per-OCID hot/cold decision
     compile_collection's two_phase="auto" makes): the cold tail merges in
-    ONE applyInPandas pass, the hot OCID goes through the two-phase
-    partial merge — phase A pre-merges each ≤100-release batch in
-    parallel, phase B reduces ~N/100 partials — so the hot OCID's
-    wall-clock is O(N/cores + N/batch) instead of one task's O(N).
+    ONE group walk (merged_by_ocid), the hot OCID goes through the
+    two-phase partial merge — phase A pre-merges each ≤100-release batch
+    in parallel (its walk shuffles on (ocid, salt)), phase B reduces
+    ~N/100 partials — so the hot OCID's wall-clock is O(N/cores +
+    N/batch) instead of one task's O(N).
     Measured at sf0.1 (50k-release hot OCID): see SCALE.md §10."""
     from kingfisher_process_spark.operators.compile_release import skew_routed_compiled
 
@@ -792,20 +793,16 @@ def ocds_compile_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @probe("ocds_compile_skewed_single", SKEWED_SQL, survey_ids="C1,C3,skew-ext")
 def ocds_compile_skewed_single(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-phase baseline on the SAME skewed fixture (one
-    groupBy(ocid).applyInPandas task merges all hot releases
-    sequentially) — shares ocds_compile_skewed's oracle, so the two
-    paths are pinned equal cross-engine; the bench carries only the
-    two-phase form (this baseline exists to document the speedup and
-    must not rotate into the headline set at scale)."""
-    from kingfisher_process_spark.operators.compile_release import _merge_group
+    """Single-phase baseline on the SAME skewed fixture (merged_by_ocid:
+    one group-walk task merges all hot releases sequentially) — shares
+    ocds_compile_skewed's oracle, so the two paths are pinned equal
+    cross-engine; the bench carries only the two-phase form (this
+    baseline exists to document the speedup and must not rotate into the
+    headline set at scale)."""
+    from kingfisher_process_spark.operators.compile_release import merged_by_ocid
 
     rel = _skewed_releases(spark, sf_dir)
-    compiled = rel.groupBy("ocid").applyInPandas(
-        _merge_group,
-        "row_kind string, ocid string, merged string, release_date string,"
-        " hash_md5 string, note_code string, note string, note_data string")
-    return _compiled_summary(rel, compiled)
+    return _compiled_summary(rel, merged_by_ocid(rel))
 
 
 # ---------------------------------------------------------------------------
@@ -875,10 +872,9 @@ def _two_crawl_fixture(spark: SparkSession, sf_dir: str
 
 
 def _compiled_items(rel: DataFrame) -> DataFrame:
-    from kingfisher_process_spark.operators.compile_release import (
-        COMPILED_SCHEMA, _merge_group)
+    from kingfisher_process_spark.operators.compile_release import merged_by_ocid
 
-    return (rel.groupBy("ocid").applyInPandas(_merge_group, COMPILED_SCHEMA)
+    return (merged_by_ocid(rel)
             .where(F.col("row_kind") == "item")
             .select("ocid", "hash_md5"))
 
@@ -889,9 +885,9 @@ def ocds_crawl_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compile BOTH crawls through the real merge engine, then classify
     per-OCID changes with ONE full-outer hash join on (ocid, hash_md5) —
     the same device as snapshot_diff, applied to the reference's central
-    artifact. Both compiles are the single applyInPandas pass (uniform
-    single/double-release groups); the diff join is hash-partitioned on
-    ocid and classification is a map-side CASE. At 100 TB this is two
+    artifact. Both compiles are the single group walk, merged_by_ocid
+    (uniform single/double-release groups); the diff join is
+    hash-partitioned on ocid and classification is a map-side CASE. At 100 TB this is two
     partition-pruned compiled-release scans plus one join — no sort, no
     collect. The 'same' class is the strong check: it holds only if the
     merge is byte-deterministic across both runs (canonical JSON +
@@ -964,11 +960,10 @@ def ocds_incremental_compile(spark: SparkSession, sf_dir: str) -> DataFrame:
     proportional: two pruned fingerprint aggs + a merge over the change
     set, never the corpus."""
     from kingfisher_process_spark.operators.compile_release import (
-        COMPILED_SCHEMA, _merge_group, incremental_recompile)
+        incremental_recompile, merged_by_ocid)
 
     base, v1_in, v2_in = _two_crawl_fixture(spark, sf_dir)
-    old_compiled = v1_in.groupBy("ocid").applyInPandas(
-        _merge_group, COMPILED_SCHEMA)
+    old_compiled = merged_by_ocid(v1_in)
     inc = (incremental_recompile(old_compiled, v1_in, v2_in)
            .where(F.col("row_kind") == "item")
            .select(F.col("ocid").alias("i_ocid"),

@@ -8,8 +8,9 @@ Single place that encodes the engine's Spark tuning posture:
   (process/processors/compiler.py:61-62, issue #460).
 - ``spark.sql.shuffle.partitions`` sized to the core count for local mode;
   on a real cluster this is overridden by AQE coalescing anyway.
-- Arrow enabled: every Python-side operator in this engine is a Pandas UDF
-  / applyInPandas (never row-at-a-time UDFs in hot paths).
+- Arrow enabled: every Python-side operator in this engine is Arrow-batched
+  — ``mapInPandas``/``mapInArrow`` transforms, and the OCDS compile's arrow
+  group walk (never row-at-a-time UDFs in hot paths).
 - Session timezone pinned to UTC so timestamp semantics are stable across
   driver machines.
 """

@@ -7,7 +7,7 @@ times the two compile paths:
 
 - routed:       skew_routed_compiled(batch=100) — cold tail single-pass,
                 hot OCID through two-phase partial merge
-- single-phase: one groupBy(ocid).applyInPandas task merges the hot
+- single-phase: merged_by_ocid — one group-walk task merges the hot
                 OCID sequentially
 
 Usage:  python scripts/sweep_skew_compile.py [sf_dir]
@@ -26,7 +26,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kingfisher_process_spark.operators.compile_release import (  # noqa: E402
-    COMPILED_SCHEMA, _merge_group, skew_routed_compiled)
+    merged_by_ocid, skew_routed_compiled)
 from kingfisher_process_spark.plans.ocds_entry import _skewed_releases  # noqa: E402
 from kingfisher_process_spark.session import get_spark  # noqa: E402
 
@@ -65,8 +65,7 @@ def main() -> None:
             continue
         rel = rel.localCheckpoint()  # time the COMPILE, not the synthesis
         routed = timed(lambda: skew_routed_compiled(rel, batch=100).count())
-        single = timed(lambda: rel.groupBy("ocid").applyInPandas(
-            _merge_group, COMPILED_SCHEMA).count())
+        single = timed(lambda: merged_by_ocid(rel).count())
         print(json.dumps({
             "hot_n": hot_n, "tail": TAIL,
             "routed_sec": routed, "single_sec": single,

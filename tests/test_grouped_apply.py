@@ -1,16 +1,14 @@
-"""grouped_apply_sorted must be row-for-row equivalent to
+"""grouped_apply_sorted_arrow must be row-for-row equivalent to
 groupBy().applyInPandas() — including groups that span Arrow batch
-boundaries and null keys."""
+boundaries, multi-column keys and null keys."""
 
 from __future__ import annotations
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kingfisher_process_spark.operators.grouped import (
-    grouped_apply_sorted, grouped_apply_sorted_arrow)
+from kingfisher_process_spark.operators.grouped import grouped_apply_sorted_arrow
 
 OUT_SCHEMA = T.StructType([
     T.StructField("k", T.StringType()),
@@ -37,6 +35,14 @@ def tiny_batches(spark):
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
+@pytest.fixture()
+def one_partition(spark):
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    yield
+    spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
 def _rows():
     rows = []
     for g in range(40):
@@ -46,50 +52,6 @@ def _rows():
     rows.append((None, 9999))
     rows.append((None, 9998))
     return rows
-
-
-def test_matches_group_apply(spark, tiny_batches):
-    df = spark.createDataFrame(_rows(), "k string, v long")
-    expected = sorted(
-        df.groupBy("k").applyInPandas(summarize, OUT_SCHEMA).collect(),
-        key=lambda r: (r["k"] or "",))
-    got = sorted(
-        grouped_apply_sorted(df, ["k"], summarize, OUT_SCHEMA,
-                             extra_sort=["v"]).collect(),
-        key=lambda r: (r["k"] or "",))
-    assert got == expected
-    assert len(got) == 41  # 40 groups + null-key group
-
-
-def test_explicit_n_parts_single_partition(spark, tiny_batches):
-    # every group funneled into one partition: carry chain is exercised
-    # maximally (each 7-row batch ends mid-group somewhere)
-    df = spark.createDataFrame(_rows(), "k string, v long")
-    got = grouped_apply_sorted(df, ["k"], summarize, OUT_SCHEMA,
-                               extra_sort=["v"], n_parts=1).collect()
-    assert len(got) == 41
-    by_k = {r["k"]: r for r in got}
-    assert by_k["grp-012"]["n"] == 13
-    assert by_k[None]["n"] == 2
-    assert by_k["grp-012"]["vals"] == ",".join(str(1200 + i) for i in range(13))
-
-
-def test_multi_key(spark, tiny_batches):
-    rows = [(f"o-{i % 5}", i % 3, i) for i in range(60)]
-    df = spark.createDataFrame(rows, "k string, salt int, v long")
-
-    def pair(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame([{
-            "k": pdf["k"].iloc[0] + "#" + str(pdf["salt"].iloc[0]),
-            "n": len(pdf),
-            "vals": ",".join(str(x) for x in sorted(pdf["v"])),
-        }])
-
-    got = grouped_apply_sorted(df, ["k", "salt"], pair, OUT_SCHEMA,
-                               extra_sort=["v"]).collect()
-    expected = df.groupBy("k", "salt").applyInPandas(pair, OUT_SCHEMA).collect()
-    assert sorted(got) == sorted(expected)
-    assert len(got) == 15
 
 
 def summarize_rows(cols: dict) -> list[dict]:
@@ -102,9 +64,8 @@ def summarize_rows(cols: dict) -> list[dict]:
 
 
 def test_arrow_walk_matches_group_apply(spark, tiny_batches):
-    """grouped_apply_sorted_arrow (r13 merge-dispatch optimization) must
-    be row-for-row equivalent to groupBy().applyInPandas — same
-    batch-spanning and null-key cases as the pandas walk's pin."""
+    """Row-for-row equivalent to groupBy().applyInPandas, with groups
+    spanning the 7-row Arrow batches and a null-key group."""
     df = spark.createDataFrame(_rows(), "k string, v long")
     expected = sorted(
         df.groupBy("k").applyInPandas(summarize, OUT_SCHEMA).collect(),
@@ -117,15 +78,42 @@ def test_arrow_walk_matches_group_apply(spark, tiny_batches):
     assert len(got) == 41  # 40 groups + null-key group
 
 
-def test_arrow_walk_single_partition_carry_chain(spark, tiny_batches):
+def test_arrow_walk_single_partition_carry_chain(spark, tiny_batches,
+                                                 one_partition):
+    # every group funneled into one partition: carry chain is exercised
+    # maximally (each 7-row batch ends mid-group somewhere)
     df = spark.createDataFrame(_rows(), "k string, v long")
     got = grouped_apply_sorted_arrow(df, ["k"], summarize_rows, OUT_SCHEMA,
-                                     extra_sort=["v"], n_parts=1).collect()
+                                     extra_sort=["v"]).collect()
     assert len(got) == 41
     by_k = {r["k"]: r for r in got}
     assert by_k["grp-012"]["n"] == 13
     assert by_k[None]["n"] == 2
     assert by_k["grp-012"]["vals"] == ",".join(str(1200 + i) for i in range(13))
+
+
+def test_arrow_walk_multi_key(spark, tiny_batches):
+    # the two-phase merge's phase-A shape: groups keyed on (k, salt)
+    rows = [(f"o-{i % 5}", i % 3, i) for i in range(60)]
+    df = spark.createDataFrame(rows, "k string, salt int, v long")
+
+    def pair(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame([{
+            "k": pdf["k"].iloc[0] + "#" + str(pdf["salt"].iloc[0]),
+            "n": len(pdf),
+            "vals": ",".join(str(x) for x in sorted(pdf["v"])),
+        }])
+
+    def pair_rows(cols: dict) -> list[dict]:
+        return [{"k": cols["k"][0] + "#" + str(cols["salt"][0]),
+                 "n": len(cols["v"]),
+                 "vals": ",".join(str(x) for x in sorted(cols["v"]))}]
+
+    got = grouped_apply_sorted_arrow(df, ["k", "salt"], pair_rows, OUT_SCHEMA,
+                                     extra_sort=["v"]).collect()
+    expected = df.groupBy("k", "salt").applyInPandas(pair, OUT_SCHEMA).collect()
+    assert sorted(got) == sorted(expected)
+    assert len(got) == 15
 
 
 # -- property test of the carry/stitch logic (no Spark: the generator is
@@ -157,36 +145,9 @@ def batched_groups(draw):
 
 @given(batched_groups())
 @settings(max_examples=200, deadline=None)
-def test_iter_groups_property(case):
-    from kingfisher_process_spark.operators.grouped import iter_groups
-
-    rows, bounds = case
-    full = pd.DataFrame(rows, columns=["k", "v"])
-    batches = [full.iloc[a:b] for a, b in zip(bounds, bounds[1:])]
-
-    def fn(pdf):
-        key = pdf["k"].iloc[0]
-        return pd.DataFrame([{
-            "k": None if pd.isna(key) else key,
-            "n": len(pdf),
-            "vals": ",".join(str(x) for x in sorted(pdf["v"])),
-        }])
-
-    got = pd.concat(list(iter_groups(iter(batches), ["k"], fn)),
-                    ignore_index=True)
-    expected = pd.concat(
-        [fn(g) for _, g in full.groupby("k", sort=False, dropna=False)],
-        ignore_index=True)
-    got = got.sort_values("vals").reset_index(drop=True)
-    expected = expected.sort_values("vals").reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, expected)
-
-
-@given(batched_groups())
-@settings(max_examples=200, deadline=None)
 def test_iter_groups_rows_property(case):
-    """The arrow walk's carry/stitch (iter_groups_rows) agrees with the
-    pandas walk's reference semantics on random batch cut points."""
+    """The arrow walk's carry/stitch (iter_groups_rows) agrees with a
+    pandas groupby over the whole input on random batch cut points."""
     import pyarrow as pa
 
     from kingfisher_process_spark.operators.grouped import iter_groups_rows

@@ -8,8 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kingfisher_process_spark.operators.compile_release import (
-    COMPILED_SCHEMA, _merge_group, dirty_ocids, incremental_recompile,
-    release_fingerprints)
+    dirty_ocids, incremental_recompile, merged_by_ocid, release_fingerprints)
 
 REL_SCHEMA = ("ocid string, release_date string, data string,"
               " package_data string")
@@ -74,11 +73,9 @@ def test_incremental_equals_full_recompile_bytes(spark):
         ("mod", "2020-06-01", release("mod", "m2", "2020-06-01", 12.5)),
         ("new", "2020-01-01", release("new", "n1", "2020-01-01", 3.25)),
     ])
-    old_compiled = old_rel.groupBy("ocid").applyInPandas(
-        _merge_group, COMPILED_SCHEMA)
+    old_compiled = merged_by_ocid(old_rel)
     inc = incremental_recompile(old_compiled, old_rel, new_rel)
-    full = new_rel.groupBy("ocid").applyInPandas(
-        _merge_group, COMPILED_SCHEMA)
+    full = merged_by_ocid(new_rel)
     inc_rows = {r["ocid"]: r for r in
                 inc.where(F.col("row_kind") == "item").collect()}
     full_rows = {r["ocid"]: r for r in
@@ -256,8 +253,7 @@ def test_large_dirty_set_falls_back_to_shuffle_join(spark, monkeypatch):
     rows_new = [(f"o-{i}", "2020-02-01", f'{{"ocid":"o-{i}","id":"b"}}')
                 for i in range(8)]
     old_rel, new_rel = _rel(spark, rows_old), _rel(spark, rows_new)
-    old_compiled = old_rel.groupBy("ocid").applyInPandas(
-        _merge_group, COMPILED_SCHEMA)
+    old_compiled = merged_by_ocid(old_rel)
 
     small = incremental_recompile(old_compiled, old_rel, new_rel)
     assert "BroadcastHashJoin" in \
@@ -278,7 +274,6 @@ def test_empty_dirty_set_returns_old_compiled_untouched(spark):
     rows = [(f"o-{i}", "2020-01-01", f'{{"ocid":"o-{i}","id":"a"}}')
             for i in range(4)]
     rel = _rel(spark, rows)
-    old_compiled = rel.groupBy("ocid").applyInPandas(
-        _merge_group, COMPILED_SCHEMA)
+    old_compiled = merged_by_ocid(rel)
     out = incremental_recompile(old_compiled, rel, rel)
     assert out is old_compiled

@@ -539,7 +539,7 @@ def test_materialized_compile_swaps_only_dirty_buckets(spark, tmp_path):
     import os
 
     from kingfisher_process_spark.operators.compile_release import (
-        COMPILED_SCHEMA, _merge_group, materialized_compile_upsert)
+        materialized_compile_upsert, merged_by_ocid)
 
     n_buckets = 8
 
@@ -588,8 +588,7 @@ def test_materialized_compile_swaps_only_dirty_buckets(spark, tmp_path):
     got = {r["ocid"]: r for r in spark.read.parquet(compiled)
            .where(F.col("row_kind") == "item").collect()}
     full = {r["ocid"]: r for r in
-            b0.unionByName(b1).groupBy("ocid")
-            .applyInPandas(_merge_group, COMPILED_SCHEMA)
+            merged_by_ocid(b0.unionByName(b1))
             .where(F.col("row_kind") == "item").collect()}
     # oc (clean, same bucket as the dirty oa) must survive the swap
     assert set(got) == set(full) == {oa, ob, oc}

@@ -266,7 +266,7 @@ def test_skew_routing_spares_cold_ocids_the_two_phase_passes(spark):
     pass; with a hot OCID only the hot rows take the partial/finalize
     stages, and the output equals the all-single-phase merge."""
     from kingfisher_process_spark.operators.compile_release import (
-        _merge_group, skew_routed_compiled)
+        merged_by_ocid, skew_routed_compiled)
 
     def rel(ocid, rid, date):
         return (ocid, date, json.dumps(
@@ -278,36 +278,29 @@ def test_skew_routing_spares_cold_ocids_the_two_phase_passes(spark):
     schema = "ocid string, release_date string, data string, package_data string"
 
     def stage_counts(df):
-        # grouped_apply_sorted_arrow runs as ONE MapInArrow over sorted
-        # partitions (r13 — pandas never enters the fused pass, so the
-        # pin also asserts MapInPandas stays absent); the two-phase
-        # partial/finalize stages as FlatMapGroupsInPandas.
+        # every grouped compile step is one MapInArrow group walk: the
+        # single-phase merge over the release columns, and the two-phase
+        # partial/finalize walks, whose inputs carry salt/partial.
         # Count formatted-plan node HEADERS (the raw string repeats AQE
         # initial/final subtrees; cached relations may still re-embed one)
         import re
 
         plan = spark._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
-        names = re.findall(r"^\(\d+\) (\S+)", plan, re.M)
-        assert not any(n == "MapInPandas" for n in names), (
-            "fused compile pass regressed to the pandas walk")
-        return (sum(1 for n in names if n == "MapInArrow"),
-                sum(1 for n in names if n == "FlatMapGroupsInPandas"))
+        inputs = re.findall(r"^\(\d+\) MapInArrow\nInput \[\d+\]: (.*)$",
+                            plan, re.M)
+        two_phase = sum(1 for i in inputs if "salt#" in i or "partial#" in i)
+        return len(inputs) - two_phase, two_phase
 
     cold_only = skew_routed_compiled(spark.createDataFrame(cold, schema), batch=3)
     assert stage_counts(cold_only) == (1, 0)  # single fused pass, no partials
 
     routed = skew_routed_compiled(spark.createDataFrame(cold + hot, schema), batch=3)
-    n_map, n_flat = stage_counts(routed)
-    assert n_map == 1, "cold rows must take exactly the one fused pass"
-    assert n_flat >= 2, "hot branch must carry partial + finalize stages"
+    n_single, n_two_phase = stage_counts(routed)
+    assert n_single == 1, "cold rows must take exactly the one fused pass"
+    assert n_two_phase >= 2, "hot branch must carry partial + finalize stages"
 
-    single = (spark.createDataFrame(cold + hot, schema)
-              .groupBy("ocid").applyInPandas(
-                  _merge_group,
-                  "row_kind string, ocid string, merged string,"
-                  " release_date string, hash_md5 string, note_code string,"
-                  " note string, note_data string"))
+    single = merged_by_ocid(spark.createDataFrame(cold + hot, schema))
     got = {r["ocid"]: r["hash_md5"] for r in
            routed.where(routed.row_kind == "item").collect()}
     want = {r["ocid"]: r["hash_md5"] for r in
