@@ -14,13 +14,17 @@ Endpoints → functions:
 CLI-only commands with no REST endpoint:
 - collectionstatus → collection_status (collectionstatus.py:55-118)
 - cancelcollection → cancel_collection (cancelcollection.py:11-26)
+
+Catalog reads (the collection lookup, notes, status counts, tree) are
+driver-side ``Store.read_rows`` calls, so every endpoint here runs no
+Spark job except the work it exists for: ``metadata``'s compiled-release
+aggregate, and the load/compile/check/wipe that ``add_files``/``close``/
+``destroy`` trigger.
 """
 
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import functions as F
 
 from kingfisher_process_spark.operators import lifecycle
 from kingfisher_process_spark.store import Store
@@ -52,12 +56,16 @@ def create_collection(store: Store, source_id: str, data_version: str, *,
         upgrade=upgrade, compile_=compile_, check=check, note=note)
 
 
+def _find(rows: list[dict], collection_id: int) -> dict:
+    for r in rows:
+        if r["id"] == collection_id:
+            return r
+    raise ApiError(f"Collection {collection_id} not found")
+
+
 def _get_collection(store: Store, collection_id: int) -> dict:
-    rows = (store.read("collection")
-            .where(F.col("id") == collection_id).collect())
-    if not rows:
-        raise ApiError(f"Collection {collection_id} not found")
-    return rows[0].asDict()
+    """The collection's catalog row — a driver-side read, no Spark job."""
+    return _find(store.read_rows("collection"), collection_id)
 
 
 def add_files(store: Store, collection_id: int, paths: list[str],
@@ -104,21 +112,19 @@ def metadata(store: Store, collection_id: int) -> dict:
 
 
 def notes(store: Store, collection_id: int) -> list[dict]:
+    """The collection's notes, sorted by id."""
     _get_collection(store, collection_id)
-    return [r.asDict() for r in lifecycle.collection_notes(store, collection_id).collect()]
+    return lifecycle.collection_notes(store, [collection_id])
 
 
 def tree(store: Store, collection_id: int) -> list[dict]:
     return lifecycle.collection_tree(store, collection_id)
 
 
-def _children(store: Store, collection_id: int) -> dict[str, dict]:
+def _children(rows: list[dict], collection_id: int) -> dict[str, dict]:
     """transform_type → child collection row."""
-    return {
-        r["transform_type"]: r
-        for r in store.read_rows("collection")
-        if r["parent_id"] == collection_id
-    }
+    return {r["transform_type"]: r for r in rows
+            if r["parent_id"] == collection_id}
 
 
 def _format_phrase(data_type: dict | str | None) -> str | None:
@@ -143,23 +149,29 @@ def collection_status(store: Store, collection_id: int) -> dict:
     """The collectionstatus command (collectionstatus.py:55-118) as data:
     root-collection fields, per-collection file/step counts, the
     compilable/completable predicates, ERROR notes, and the compiled
-    child's block when one exists. Counts come from the driver-side
-    catalog read — no Spark job."""
+    child's block when one exists. Every read is a driver-side catalog
+    read pruned to the root and its compiled child — no Spark job."""
     from collections import Counter
 
-    coll = _get_collection(store, collection_id)
+    colls = store.read_rows("collection")
+    coll = _find(colls, collection_id)
     if coll["parent_id"] is not None:
         raise ApiError(
             f"Collection {collection_id} is not a root collection. "
             f"Its parent is collection {coll['parent_id']}.")
+    children = _children(colls, collection_id)
+    upgraded = children.get(lifecycle.TRANSFORM_UPGRADE)
+    compiled = (children.get(lifecycle.TRANSFORM_COMPILE)
+                or (upgraded and _children(colls, upgraded["id"])
+                    .get(lifecycle.TRANSFORM_COMPILE)))
+    ids = [collection_id] + ([compiled["id"]] if compiled else [])
 
     files_by_coll = Counter(
-        r["collection_id"]
-        for r in store.read_rows("collection_file", ["collection_id"]))
+        r["collection_id"] for r in store.read_rows(
+            "collection_file", ["collection_id"], collection_ids=ids))
     steps_by_coll = Counter(
-        r["collection_id"]
-        for r in store.read_rows("processing_step", ["collection_id"])
-    ) if store.exists("processing_step") else Counter()
+        r["collection_id"] for r in store.read_rows(
+            "processing_step", ["collection_id"], collection_ids=ids))
 
     def block(c: dict) -> dict:
         n_files = files_by_coll.get(c["id"], 0)
@@ -186,16 +198,11 @@ def collection_status(store: Store, collection_id: int) -> dict:
                        and steps_by_coll.get(collection_id, 0) == 0),
         "error_notes": [
             {"note": r["note"], "data": r["data"]}
-            for r in store.read_rows("collection_note")
-            if r["collection_id"] == collection_id and r["code"] == "ERROR"
+            for r in store.read_rows("collection_note", ["note", "data", "code"],
+                                     collection_ids=[collection_id])
+            if r["code"] == "ERROR"
         ],
     }
-
-    children = _children(store, collection_id)
-    upgraded = children.get(lifecycle.TRANSFORM_UPGRADE)
-    compiled = (children.get(lifecycle.TRANSFORM_COMPILE)
-                or (upgraded and _children(store, upgraded["id"])
-                    .get(lifecycle.TRANSFORM_COMPILE)))
     if compiled:
         status["compiled_collection"] = {
             "id": compiled["id"],
@@ -211,15 +218,13 @@ def cancel_collection(store: Store, collection_id: int) -> list[int]:
     the collection and its upgraded/compiled children so every later
     stage no-ops (the P8 soft-delete filter) — rows are NOT wiped
     (destroy_collection does that). Returns the cancelled ids."""
-    coll = _get_collection(store, collection_id)
-    cancelled = [coll["id"]]
-    children = _children(store, collection_id)
-    for child in children.values():
+    rows = store.read_rows("collection")
+    cancelled = [_find(rows, collection_id)["id"]]
+    for child in _children(rows, collection_id).values():
         cancelled.append(child["id"])
-        for grand in _children(store, child["id"]).values():
+        for grand in _children(rows, child["id"]).values():
             cancelled.append(grand["id"])
     now = lifecycle._now()
-    rows = store.read_rows("collection")
     for r in rows:
         if r["id"] in cancelled:
             r["deleted_at"] = now

@@ -1180,26 +1180,34 @@ def _bpe_train_batched_loop(vocab: DataFrame, n_merges: int, batch: int,
 def _bpe_round_sql(r: int) -> str:
     """One unrolled oracle round: pair counts → argmax (same tiebreak) →
     greedy merge via match-run islands (keep alternating positions of
-    each run — exactly the sequential left-to-right semantics)."""
+    each run — exactly the sequential left-to-right semantics).
+
+    Every CTE is MATERIALIZED: round r+1 references round r's CTEs about
+    seven times, and DuckDB inlines a plain CTE at each reference, so the
+    unrolled plan grows exponentially in the round count (at 4 rounds
+    the inlined form ran 150 s and then ran out of DuckDB's 12.5 GiB
+    default memory limit on a 16 GB host; materialized it runs in 0.1 s).
+    Materializing changes only how often a CTE is evaluated, not its
+    rows: every CTE here is deterministic (the argmax is a total order)."""
     return f"""
-    p{r} AS (
+    p{r} AS MATERIALIZED (
       SELECT l[i + 1] AS a, l[i + 2] AS b, CAST(SUM(freq) AS BIGINT) AS n
       FROM v{r}, LATERAL unnest(range(len(l) - 1)) t(i)
       GROUP BY a, b),
-    b{r} AS (SELECT a, b, n FROM p{r} ORDER BY n DESC, a, b LIMIT 1),
-    pos{r} AS (
+    b{r} AS MATERIALIZED (SELECT a, b, n FROM p{r} ORDER BY n DESC, a, b LIMIT 1),
+    pos{r} AS MATERIALIZED (
       SELECT v.word, v.freq, t.i, v.l[t.i + 1] AS s,
              CASE WHEN t.i < len(v.l) - 1 AND v.l[t.i + 1] = b.a
                        AND v.l[t.i + 2] = b.b THEN 1 ELSE 0 END AS m
       FROM v{r} v, b{r} b, LATERAL unnest(range(len(v.l))) t(i)),
-    keep{r} AS (
+    keep{r} AS MATERIALIZED (
       SELECT word, i FROM (
         SELECT word, i, MIN(i) OVER (PARTITION BY word, g) AS g0
         FROM (SELECT word, i,
                      i - ROW_NUMBER() OVER (PARTITION BY word ORDER BY i) AS g
               FROM pos{r} WHERE m = 1) runs) x
       WHERE (i - g0) % 2 = 0),
-    v{r + 1} AS (
+    v{r + 1} AS MATERIALIZED (
       SELECT p.word, p.freq,
              list(CASE WHEN k1.i IS NOT NULL THEN b.a || b.b ELSE p.s END
                   ORDER BY p.i) AS l

@@ -10,9 +10,11 @@ shapes mirror the reference endpoint-for-endpoint:
 - ``GET /api/collections/{id}/tree/``   → root + derived collection rows (views.py:283-331)
 
 Errors map to the reference's statuses: validation → 400, missing id →
-404. The app is a plain WSGI callable — run it under any WSGI server
-(``serve()`` wraps stdlib ``wsgiref`` for local use); tests drive it
-in-process with synthetic environs, no socket needed.
+404. Catalog reads go through the driver-side store path, so GET tree and
+GET notes run no Spark job and GET metadata runs only its compiled-release
+aggregate (README "Catalog reads"). The app is a plain WSGI callable — run
+it under any WSGI server (``serve()`` wraps stdlib ``wsgiref`` for local
+use); tests drive it in-process with synthetic environs, no socket needed.
 """
 
 from __future__ import annotations
@@ -118,19 +120,19 @@ def make_app(store: Store) -> Callable:
             # LEVELS if l in requested]
             wanted = [lv for lv in LEVELS
                       if lv in set(query.get("level", LEVELS))]
-            family = [pk] + [c["id"] for c in api.tree(store, pk)
-                             if c["id"] != pk]
+            # the root's tree starts at the root; one catalog read covers
+            # the whole family's notes
+            family = [c["id"] for c in api.tree(store, pk)]
             notes: dict[str, list] = {lv: [] for lv in wanted}
-            for cid in family:
-                for r in api.notes(store, cid):
-                    if r["code"] in notes:
-                        data = r["data"]
-                        if isinstance(data, str):
-                            try:
-                                data = json.loads(data)
-                            except ValueError:
-                                pass
-                        notes[r["code"]].append([r["note"], data])
+            for r in lifecycle.collection_notes(store, family):
+                if r["code"] in notes:
+                    data = r["data"]
+                    if isinstance(data, str):
+                        try:
+                            data = json.loads(data)
+                        except ValueError:
+                            pass
+                    notes[r["code"]].append([r["note"], data])
             return 200, notes
         if name == "tree":
             rows = api.tree(store, pk)

@@ -11,7 +11,9 @@ the reference's essential shape: ``validation_errors`` with json-path +
 message.
 
 Runs inside ``mapInPandas`` — the validator compiles once per executor
-batch iterator, then streams Arrow batches.
+batch iterator, then streams Arrow batches. Each item is validated once:
+check ids are assigned on the item keys first, and validation runs
+downstream of that sort.
 """
 
 from __future__ import annotations
@@ -28,7 +30,8 @@ from pyspark.sql import types as T
 
 from kingfisher_process_spark.store import Store, with_sequential_ids
 
-CHECK_SCHEMA = T.StructType([
+CHECKED_SCHEMA = T.StructType([
+    T.StructField("id", T.LongType()),
     T.StructField("item_id", T.LongType()),
     T.StructField("cove_output", T.StringType()),
 ])
@@ -392,6 +395,43 @@ def _jsonable(obj):
     return obj
 
 
+def _validated(store: Store, keyed: DataFrame, record_pkg: bool,
+               extension_schemas: dict[str, dict] | None) -> DataFrame:
+    """(id, item_id, cove_output) for rows that already carry their check
+    ``id``: join each item's payload and package, then validate it — once,
+    downstream of the id assignment. (Validating before the ids would run
+    every check twice: the range sort's boundary sample re-evaluates its
+    input.) Package metadata rides along so each item is checked against
+    ITS package's declared extension set (checker.py:104-107 repackages
+    item.package_data.data); package_data is deduplicated and small — the
+    join is broadcast-shaped."""
+    pkg = store.read("package_data").select(
+        F.col("id").alias("package_data_id"), F.col("data").alias("pkg"))
+    payload = (
+        keyed.join(store.read("data").select(F.col("id").alias("data_id"), "data"),
+                   "data_id")
+        .join(F.broadcast(pkg), "package_data_id", "left")
+        .select("id", "item_id", "data", "pkg")
+    )
+
+    def gen(batches):
+        for pdf in batches:
+            out = [check_item(d, record_pkg,
+                              package_json=p if isinstance(p, str) else None,
+                              extension_schemas=extension_schemas)
+                   for d, p in zip(pdf["data"], pdf["pkg"])]
+            yield pd.DataFrame({"id": pdf["id"], "item_id": pdf["item_id"],
+                                "cove_output": out})
+
+    return payload.mapInPandas(gen, CHECKED_SCHEMA)
+
+
+_CHECK_TABLES = {
+    "release": ("release", "release_check", "release_id"),
+    "record": ("record", "record_check", "record_id"),
+}
+
+
 def check_collection(store: Store, collection_id: int, kind: str = "release",
                      extension_schemas: dict[str, dict] | None = None) -> int:
     """Check all unchecked releases/records of a collection (left-anti join
@@ -400,43 +440,17 @@ def check_collection(store: Store, collection_id: int, kind: str = "release",
 
     if lifecycle.collection_cancelled(store, collection_id):
         return 0
-    table, check_table, fk = {
-        "release": ("release", "release_check", "release_id"),
-        "record": ("record", "record_check", "record_id"),
-    }[kind]
+    table, check_table, fk = _CHECK_TABLES[kind]
     items = store.read(table).where(F.col("collection_id") == collection_id)
     existing = store.read(check_table).select(F.col(fk).alias("id"))
-    # package metadata rides along so each item is checked against ITS
-    # package's declared extension set (checker.py:104-107 repackages
-    # item.package_data.data); package_data is deduplicated and small —
-    # the join is broadcast-shaped
-    pkg = store.read("package_data").select(
-        F.col("id").alias("package_data_id"), F.col("data").alias("pkg"))
-    todo = (
-        items.join(existing, "id", "left_anti")
-        .join(store.read("data").select(F.col("id").alias("data_id"), "data"), "data_id")
-        .join(F.broadcast(pkg), "package_data_id", "left")
-        .select(F.col("id").alias("item_id"), "data", "pkg")
-    )
-    record_pkg = kind == "record"
-
-    def gen(batches):
-        for pdf in batches:
-            out = [check_item(d, record_pkg,
-                              package_json=p if isinstance(p, str) else None,
-                              extension_schemas=extension_schemas)
-                   for d, p in zip(pdf["data"], pdf["pkg"])]
-            yield pd.DataFrame({"item_id": pdf["item_id"], "cove_output": out})
-
-    checked = todo.mapInPandas(gen, CHECK_SCHEMA)
+    todo = (items.join(existing, "id", "left_anti")
+            .select(F.col("id").alias("item_id"), "data_id", "package_data_id"))
     base = store.next_id(check_table)
-    rows, n, pinned = with_sequential_ids(checked, base, order_by=["item_id"])
+    keyed, n, pinned = with_sequential_ids(todo, base, order_by=["item_id"])
     if n:
-        store.append(check_table, rows.select(
-            "id",
-            F.col("item_id").alias(fk),
-            "cove_output",
-        ))
+        checked = _validated(store, keyed, kind == "record", extension_schemas)
+        store.append(check_table, checked.select(
+            "id", F.col("item_id").alias(fk), "cove_output"))
     store.advance_next_id(check_table, base + n)
     pinned.unpersist()
     return n
@@ -465,15 +479,10 @@ def incremental_check_collection(store: Store, collection_id: int,
 
     if lifecycle.collection_cancelled(store, collection_id):
         return {"checked": 0, "reused": 0}
-    table, check_table, fk = {
-        "release": ("release", "release_check", "release_id"),
-        "record": ("record", "record_check", "record_id"),
-    }[kind]
+    table, check_table, fk = _CHECK_TABLES[kind]
     items = store.read(table).where(F.col("collection_id") == collection_id)
     existing = store.read(check_table).select(F.col(fk).alias("id"))
-    todo = (items.join(existing, "id", "left_anti")
-            .select(F.col("id").alias("item_id"), "data_id",
-                    "package_data_id"))
+    todo = items.join(existing, "id", "left_anti")
 
     prior_items = (store.read(table)
                    .where(F.col("collection_id") == prior_collection_id)
@@ -486,42 +495,24 @@ def incremental_check_collection(store: Store, collection_id: int,
         # deterministic representative anyway
         .agg(F.min_by("cove_output", F.col(fk)).alias("prior_output"))
     )
+    # one row per (p_did, p_pid) key, so the left join keeps one row per
+    # item: reused items carry the prior output, fresh ones a null
     key = ((F.col("data_id") == F.col("p_did"))
            & F.col("package_data_id").eqNullSafe(F.col("p_pid")))
-    reused = (todo.join(prior_map, key)
-              .select("item_id", F.col("prior_output").alias("cove_output"),
-                      F.lit(True).alias("was_reused")))
-    fresh_keys = todo.join(prior_map, key, "left_anti")
-    pkg = store.read("package_data").select(
-        F.col("id").alias("package_data_id"), F.col("data").alias("pkg"))
-    fresh_in = (
-        fresh_keys
-        .join(store.read("data").select(F.col("id").alias("data_id"), "data"),
-              "data_id")
-        .join(F.broadcast(pkg), "package_data_id", "left")
-        .select("item_id", "data", "pkg")
-    )
-    record_pkg = kind == "record"
-
-    def gen(batches):
-        for pdf in batches:
-            out = [check_item(d, record_pkg,
-                              package_json=p if isinstance(p, str) else None,
-                              extension_schemas=extension_schemas)
-                   for d, p in zip(pdf["data"], pdf["pkg"])]
-            yield pd.DataFrame({"item_id": pdf["item_id"], "cove_output": out})
-
-    fresh = (fresh_in.mapInPandas(gen, CHECK_SCHEMA)
-             .withColumn("was_reused", F.lit(False)))
-    # the reuse flag rides through the id-assignment job so the reused
-    # count comes off the CACHED ranked rows — no second scan of the
-    # join (with_sequential_ids already materializes `pinned`)
-    checked = reused.unionByName(fresh)
+    resolved = (todo.join(prior_map, key, "left")
+                .select(F.col("id").alias("item_id"), "data_id", "package_data_id",
+                        "prior_output",
+                        F.col("p_did").isNotNull().alias("was_reused")))
     base = store.next_id(check_table)
-    rows, n, pinned = with_sequential_ids(checked, base, order_by=["item_id"])
-    n_reused = rows.where(F.col("was_reused")).count() if n else 0
+    keyed, n, pinned = with_sequential_ids(resolved, base, order_by=["item_id"])
+    # the reused count comes off the cached ranked keys — no second scan
+    n_reused = pinned.where(F.col("was_reused")).count() if n else 0
     if n:
-        store.append(check_table, rows.select(
+        reused = (keyed.where(F.col("was_reused"))
+                  .select("id", "item_id", F.col("prior_output").alias("cove_output")))
+        fresh = _validated(store, keyed.where(~F.col("was_reused")),
+                           kind == "record", extension_schemas)
+        store.append(check_table, reused.unionByName(fresh).select(
             "id", F.col("item_id").alias(fk), "cove_output"))
     store.advance_next_id(check_table, base + n)
     pinned.unpersist()

@@ -8,13 +8,19 @@ across workers. In this engine stages run as a synchronous Spark DAG, so
 "compilable" and "completable" reduce to stage ordering; what remains of
 the lifecycle is real state: collection rows, lineage, timestamps, cached
 counts, soft-delete.
+
+Every catalog read here is driver-side (``Store.read_rows``, pruned to the
+collections at hand; finish counts from parquet footers via
+``Store.count_rows``), so lifecycle gates, notes and finish run no Spark
+job. Spark runs only over data: the metadata endpoint's compiled-release
+aggregate and the orphan-data anti-join.
 """
 
 from __future__ import annotations
 
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame
+import pyarrow.dataset as ds
 from pyspark.sql import functions as F
 
 from kingfisher_process_spark.store import Store
@@ -112,10 +118,9 @@ def create_load_steps(store: Store, collection_id: int,
 
 
 def pending_load_steps(store: Store, collection_id: int) -> list[dict]:
-    if not store.exists("processing_step"):
-        return []
-    return [r for r in store.read_rows("processing_step")
-            if r["collection_id"] == collection_id and r["name"] == STEP_LOAD]
+    return [r for r in store.read_rows("processing_step",
+                                       collection_ids=[collection_id])
+            if r["name"] == STEP_LOAD]
 
 
 def delete_steps(store: Store, step_ids: list[int]) -> None:
@@ -141,8 +146,8 @@ def create_collection_files(store: Store, collection_id: int,
     base = store.next_id("collection_file")
     existing = {
         r["filename"]
-        for r in store.read_rows("collection_file", ["collection_id", "filename"])
-        if r["collection_id"] == collection_id
+        for r in store.read_rows("collection_file", ["filename"],
+                                 collection_ids=[collection_id])
     }
     pairs = []
     rows = []
@@ -186,36 +191,15 @@ def finish_collection(store: Store, collection_id: int) -> dict:
     return finish_collections(store, [collection_id])[collection_id]
 
 
-def finish_collections(store: Store, collection_ids: list[int],
-                       known_counts: dict[int, dict[str, int]] | None = None,
-                       ) -> dict[int, dict]:
-    """Batch finish: cache counts + completed_at for several collections in
-    ONE Spark job (union of partition-pruned scans, grouped by collection).
-    The pipeline finishes root/upgraded/compiled together instead of paying
-    one count job per collection.
-
-    ``known_counts``: {collection_id: {table: n}} from a caller that just
-    wrote the rows itself (the pipeline's stage results carry every count).
-    When it covers all requested collections the count job is skipped
-    entirely — tables unmentioned for a covered collection are taken as 0,
-    so it is only valid for collections the caller populated from scratch.
-    """
+def finish_collections(store: Store, collection_ids: list[int]) -> dict[int, dict]:
+    """Batch finish: cache counts + completed_at for several collections
+    (the pipeline finishes root/upgraded/compiled together). Each count is
+    the exact row total of the collection's ``release``/``record``/
+    ``compiled_release`` partition, summed from parquet footers — O(files),
+    no rows read, no Spark job."""
     fields = {"release": "cached_releases_count",
               "record": "cached_records_count",
               "compiled_release": "cached_compiled_releases_count"}
-    if known_counts is not None and all(c in known_counts for c in collection_ids):
-        by_key = {(t, cid): n
-                  for cid, per in known_counts.items() for t, n in per.items()}
-    else:
-        unioned = None
-        for table in fields:
-            part = (store.read(table)
-                    .where(F.col("collection_id").isin(collection_ids))
-                    .select(F.lit(table).alias("t"), "collection_id"))
-            unioned = part if unioned is None else unioned.unionAll(part)
-        by_key = {(r["t"], r["collection_id"]): r["n"] for r in
-                  unioned.groupBy("t", "collection_id")
-                  .agg(F.count(F.lit(1)).alias("n")).collect()}
     now = _now()
     out: dict[int, dict] = {}
     # one read/modify/swap of the catalog covers every collection
@@ -224,7 +208,7 @@ def finish_collections(store: Store, collection_ids: list[int],
     for d in rows:
         max_id = max(max_id, d["id"])
         if d["id"] in collection_ids:
-            counts = {field: by_key.get((table, d["id"]), 0)
+            counts = {field: store.count_rows(table, d["id"])
                       for table, field in fields.items()}
             d.update(completed_at=now, **counts)
             out[d["id"]] = counts
@@ -284,7 +268,11 @@ def collection_metadata(store: Store, collection_id: int) -> dict:
     views.py:193-194), license/publication policy from a sample package of
     the ROOT collection (views.py:224-229 runs the package_data query
     against ``collection.get_root_parent()`` — derived collections carry
-    no release/record rows of their own)."""
+    no release/record rows of their own).
+
+    The compiled-release aggregate is the endpoint's only Spark job; the
+    package sample is a driver-side scan that stops at the root's first
+    envelope row with a package, then one package_data row by id."""
     crs = store.read("compiled_release").where(F.col("collection_id") == collection_id)
     today = datetime.now(tz=timezone.utc).date().isoformat()
     agg = crs.where(
@@ -299,22 +287,21 @@ def collection_metadata(store: Store, collection_id: int) -> dict:
     root_id = collection_id
     while rows.get(root_id, {}).get("parent_id") is not None:
         root_id = rows[root_id]["parent_id"]
-    pkg = []
+    pkg = None
     for table in ("record", "release"):  # record first, as the UNION ALL does
-        pkg = (
-            store.read(table).where(F.col("collection_id") == root_id)
-            .where(F.col("package_data_id").isNotNull())
-            .select("package_data_id").limit(1)
-            .join(store.read("package_data"), F.col("package_data_id") == F.col("id"))
-            .select("data").collect()
-        )
+        env = store.first_row(table, ["package_data_id"],
+                              (ds.field("collection_id") == root_id)
+                              & ds.field("package_data_id").is_valid())
+        if env is not None:
+            pkg = store.first_row("package_data", ["data"],
+                                  ds.field("id") == env["package_data_id"])
         if pkg:
             break
     meta = dict(agg.asDict())
     if pkg:
         import json as _json
 
-        p = _json.loads(pkg[0]["data"])
+        p = _json.loads(pkg["data"])
         for ours, theirs in (("license", "license"),
                              ("publication_policy", "publicationPolicy"),
                              ("version", "version")):
@@ -344,9 +331,10 @@ def collection_tree(store: Store, collection_id: int) -> list[dict]:
     return out
 
 
-def collection_notes(store: Store, collection_id: int) -> DataFrame:
-    return (
-        store.read("collection_note")
-        .where(F.col("collection_id") == collection_id)
-        .orderBy("id")
-    )
+def collection_notes(store: Store, collection_ids: list[int]) -> list[dict]:
+    """Notes of ``collection_ids`` as driver rows: grouped by collection in
+    the given order, sorted by ``id`` within each — one pruned catalog
+    read, no Spark job."""
+    order = {cid: i for i, cid in enumerate(collection_ids)}
+    return sorted(store.read_rows("collection_note", collection_ids=collection_ids),
+                  key=lambda r: (order[r["collection_id"]], r["id"]))

@@ -153,8 +153,9 @@ def process_collection(
             # compilable() never fires for this format)
             lifecycle.add_note(store, comp_id, "INFO",
                               "Collection is already compiled; compile step skipped")
-        # compiled collection joins the batch finish at the end (one job
-        # covers root/upgraded/compiled — synchronous DAG, same semantics)
+        # compiled collection joins the batch finish at the end (one
+        # catalog swap covers root/upgraded/compiled — synchronous DAG,
+        # same semantics)
 
     if check:
         kind = "record" if fmt == detect.RECORD_PACKAGE else "release"
@@ -163,18 +164,7 @@ def process_collection(
                                            extension_schemas=extension_schemas)
 
     lifecycle.close_collection(store, ids["root"], expected_files_count=len(paths))
-    # every stage already reported what it wrote into these fresh
-    # collections — finish needs no re-count job
-    item_table = {detect.RELEASE_PACKAGE: "release",
-                  detect.RECORD_PACKAGE: "record",
-                  detect.COMPILED_RELEASE: "compiled_release"}[fmt]
-    known = {ids["root"]: {item_table: result["load"]["rows"]}}
-    if upgrade:
-        known[ids["upgraded"]] = {item_table: result["upgrade"]["rows"]}
-    if compile_:
-        known[ids["compiled"]] = {
-            "compiled_release": result.get("compile", {}).get("compiled", 0)}
-    lifecycle.finish_collections(store, list(ids.values()), known_counts=known)
+    lifecycle.finish_collections(store, list(ids.values()))
     return result
 
 
@@ -284,8 +274,8 @@ def load_pending(spark: SparkSession, store: Store, root_id: int) -> dict:
         return {"rows": 0, "notes": 0, "files": 0}
     fam = _family(store, root_id)
     cf_all = {r["id"]: r["filename"]
-              for r in store.read_rows("collection_file")
-              if r["collection_id"] == root_id}
+              for r in store.read_rows("collection_file", ["id", "filename"],
+                                       collection_ids=[root_id])}
     if fam["root"]["data_type"] is None:
         # registration couldn't detect (bad first file): the error
         # surfaces here, reference-style (file_worker abort + ERROR note)
@@ -360,8 +350,8 @@ def close_and_process(spark: SparkSession, store: Store, root_id: int, *,
     fam = _family(store, root_id)
     root = fam["root"]
     steps = root["steps"] or []
-    n_files = sum(1 for r in store.read_rows("collection_file")
-                  if r["collection_id"] == root_id)
+    n_files = len(store.read_rows("collection_file", ["id"],
+                                  collection_ids=[root_id]))
     lifecycle.close_collection(
         store, root_id,
         expected_files_count=(n_files if expected_files_count is None

@@ -97,14 +97,18 @@ PARTITIONED_BY_COLLECTION = {"release", "record", "compiled_release", "collectio
 # Postgres INSERTs either way.
 DRIVER_APPEND_MAX = 20_000
 
-# Driver-scale catalog tables: O(#collections) rows, not O(data). Single-row
-# lifecycle updates to these go through the pyarrow fast path (append_rows /
-# overwrite_rows / read_rows) — same parquet layout Spark writes, zero Spark
-# jobs. The analogy is Delta's transaction log: catalog metadata is
-# driver-side; distributed jobs are for data. (The reference holds these as
-# ordinary Postgres rows — process/models.py:30-260 — where a one-row UPDATE
-# is free; a distributed overwrite per lifecycle tick is the non-idiomatic
-# translation we're avoiding.)
+# Driver-scale catalog tables: O(#collections) rows, not O(data). Both
+# directions go through the pyarrow fast path: single-row lifecycle updates
+# (append_rows / overwrite_rows) and every read on the API, HTTP and
+# lifecycle paths (read_rows, pruned to the caller's collections with
+# ``collection_ids``) — same parquet layout Spark writes, zero Spark jobs.
+# Package code never reads these tables through ``read`` (a Spark job per
+# status poll); tests/test_catalog_reads.py pins that. The analogy is
+# Delta's transaction log: catalog metadata is driver-side; distributed jobs
+# are for data. (The reference holds these as ordinary Postgres rows —
+# process/models.py:30-260 — where a one-row SELECT or UPDATE is free; a
+# distributed job per lifecycle tick is the non-idiomatic translation we're
+# avoiding.)
 METADATA_TABLES = {"collection", "collection_file", "collection_note", "processing_step"}
 
 # package_data is cardinality-driver-scale too (one row per DISTINCT
@@ -244,22 +248,33 @@ class Store:
         os.replace(tmp, self.path(table))
         self._next_ids.pop(table, None)
 
-    def read_rows(self, table: str, columns: list[str] | None = None) -> list[dict]:
+    def _dataset(self, table: str):
+        import pyarrow.dataset as ds
+
+        return ds.dataset(self.path(table), format="parquet", partitioning="hive")
+
+    def read_rows(self, table: str, columns: list[str] | None = None,
+                  collection_ids: list[int] | None = None) -> list[dict]:
         """Driver-side read of a METADATA_TABLES table as dicts (pyarrow,
-        no Spark job). Timestamps come back naive-UTC, matching what a
+        no Spark job). ``collection_ids`` keeps only those collections'
+        partitions: pruned by directory, so the other collections' files
+        are never opened. Timestamps come back naive-UTC, matching what a
         Spark ``collect()`` under a UTC session returns. Falls back to the
         Spark path if the directory's fragments can't be unified (e.g. a
         pre-existing store written with INT96 timestamps)."""
         if table not in DRIVER_WRITABLE_TABLES:
             raise ValueError(f"{table} is not a driver-scale metadata table")
+        if collection_ids is not None and table not in PARTITIONED_BY_COLLECTION:
+            raise ValueError(f"{table} is not partitioned by collection")
         if not self.exists(table):
             return []
         try:
             import pyarrow.dataset as ds
 
-            dataset = ds.dataset(self.path(table), format="parquet",
-                                 partitioning="hive")
-            rows = dataset.to_table(columns=columns).to_pylist()
+            where = (None if collection_ids is None
+                     else ds.field("collection_id").isin(list(collection_ids)))
+            rows = self._dataset(table).to_table(
+                columns=columns, filter=where).to_pylist()
             for r in rows:
                 for k, v in r.items():
                     if isinstance(v, datetime) and v.tzinfo is not None:
@@ -267,9 +282,33 @@ class Store:
             return rows
         except Exception:
             df = self.read(table)
+            if collection_ids is not None:
+                df = df.where(F.col("collection_id").isin(list(collection_ids)))
             if columns:
                 df = df.select(*columns)
             return [r.asDict() for r in df.collect()]
+
+    def first_row(self, table: str, columns: list[str], where) -> dict | None:
+        """The first row matching the pyarrow expression ``where``, read on
+        the driver (no Spark job). The scan stops at the first batch that
+        holds a match, so a sample from a big table costs one batch, not
+        one column of the table."""
+        if not self.exists(table):
+            return None
+        rows = (self._dataset(table).scanner(columns=columns, filter=where)
+                .head(1).to_pylist())
+        return rows[0] if rows else None
+
+    def count_rows(self, table: str, collection_id: int) -> int:
+        """Exact row count of one collection's partition from its parquet
+        footers: O(files), reads no rows and runs no Spark job. The files
+        are the ones a Spark scan reads (hidden ``_``/``.`` names skipped),
+        written by Spark or by the pyarrow path alike."""
+        part = os.path.join(self.path(table), f"collection_id={collection_id}")
+        if not os.path.isdir(part):
+            return 0
+        return sum(pq.ParquetFile(os.path.join(part, f)).metadata.num_rows
+                   for f in os.listdir(part) if not f.startswith(("_", ".")))
 
     def drop_collection_partition(self, table: str, collection_id: int) -> None:
         """Delete one collection's rows — a partition drop, O(1) metadata."""
