@@ -10,10 +10,14 @@ network — same degradation as compile). The output ``cove_output`` mirrors
 the reference's essential shape: ``validation_errors`` with json-path +
 message.
 
-Runs inside ``mapInPandas`` — the validator compiles once per executor
-batch iterator, then streams Arrow batches. Each item is validated once:
-check ids are assigned on the item keys first, and validation runs
-downstream of that sort.
+Two paths, chosen by the collection's footer row count alone
+(``store.DRIVER_CHECK_MAX``). At or under the gate, ``check_item`` runs on
+the driver over pyarrow-read payloads and the rows are appended with
+``append_rows``: no Spark job. Above it the check runs inside
+``mapInPandas`` — the validator compiles once per executor batch
+iterator, then streams Arrow batches. Each item is validated once: check
+ids are assigned on the item keys first, and validation runs downstream of
+that sort. Both paths store the same ids and ``cove_output``.
 """
 
 from __future__ import annotations
@@ -28,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kingfisher_process_spark import store as store_mod
 from kingfisher_process_spark.store import Store, with_sequential_ids
 
 CHECKED_SCHEMA = T.StructType([
@@ -432,15 +437,59 @@ _CHECK_TABLES = {
 }
 
 
+def _check_collection_driver(store: Store, collection_id: int, kind: str,
+                             extension_schemas: dict[str, dict] | None,
+                             ) -> int | None:
+    """``check_collection`` without a Spark job: the items, their existing
+    checks and their payloads are pyarrow reads, ``check_item`` runs per
+    item in item-id order, and the rows are appended with ``append_rows``
+    under the ids the Spark path's range sort gives. None when the
+    payloads pass ``DRIVER_APPEND_MAX_BYTES``: the caller then checks on
+    Spark."""
+    table, check_table, fk = _CHECK_TABLES[kind]
+    items = store.read_rows(table, ["id", "data_id", "package_data_id"],
+                            collection_ids=[collection_id])
+    done = store.present_ids(check_table, fk, (r["id"] for r in items))
+    todo = sorted((r for r in items if r["id"] not in done), key=lambda r: r["id"])
+    datas = store.payloads_by_id(
+        "data", (r["data_id"] for r in todo), store_mod.DRIVER_APPEND_MAX_BYTES)
+    pkgs = store.payloads_by_id(
+        "package_data", (r["package_data_id"] for r in todo),
+        store_mod.DRIVER_APPEND_MAX_BYTES)
+    if datas is None or pkgs is None:
+        return None
+    base = store.next_id(check_table)
+    # an item without a payload keeps its id slot, as under the Spark
+    # path's inner join on data
+    store.append_rows(check_table, [
+        {"id": base + i, fk: r["id"],
+         "cove_output": check_item(datas[r["data_id"]], kind == "record",
+                                   package_json=pkgs.get(r["package_data_id"]),
+                                   extension_schemas=extension_schemas)}
+        for i, r in enumerate(todo) if r["data_id"] in datas
+    ])
+    store.advance_next_id(check_table, base + len(todo))
+    return len(todo)
+
+
 def check_collection(store: Store, collection_id: int, kind: str = "release",
                      extension_schemas: dict[str, dict] | None = None) -> int:
     """Check all unchecked releases/records of a collection (left-anti join
-    against existing checks — addchecks.py:35-44 shape). Returns row count."""
+    against existing checks — addchecks.py:35-44 shape). Returns row count.
+
+    A driver-scale collection — at most ``store.DRIVER_CHECK_MAX`` items by
+    its footer count, payloads within ``DRIVER_APPEND_MAX_BYTES`` — is
+    checked on the driver (``_check_collection_driver``); larger ones run
+    the Spark path below."""
     from kingfisher_process_spark.operators import lifecycle
 
     if lifecycle.collection_cancelled(store, collection_id):
         return 0
     table, check_table, fk = _CHECK_TABLES[kind]
+    if store.count_rows(table, collection_id) <= store_mod.DRIVER_CHECK_MAX:
+        n = _check_collection_driver(store, collection_id, kind, extension_schemas)
+        if n is not None:
+            return n
     items = store.read(table).where(F.col("collection_id") == collection_id)
     existing = store.read(check_table).select(F.col(fk).alias("id"))
     todo = (items.join(existing, "id", "left_anti")

@@ -1,9 +1,16 @@
 """Release compile stage (C1) — group the parent collection's releases by
 OCID and merge each group (reference: process/processors/compiler.py:21-84).
 
-Spark-first shape: ``releases ⋈ data ⋈ package_data`` (payload joins pruned
-to the parent collection's partition) → ``merged_by_ocid``: one arrow group
-walk (operators/grouped.grouped_apply_sorted_arrow) running the pure-Python
+A driver-scale parent (``store.DRIVER_COMPILE_MAX`` releases by its footer
+count, payloads within ``DRIVER_APPEND_MAX_BYTES``) compiles on the driver,
+as the reference compiles a collection in one worker: pyarrow reads, the
+same per-OCID kernel (``_merge_rows``, single-phase even for a hot OCID),
+and the same persist tail, so the stored rows are the Spark path's.
+
+Above the gate, the Spark shape: ``releases ⋈ data ⋈ package_data``
+(payload joins pruned to the parent collection's partition) →
+``merged_by_ocid``: one arrow group walk
+(operators/grouped.grouped_apply_sorted_arrow) running the pure-Python
 merge engine per OCID. Its hash shuffle on ``ocid`` is the only wide
 dependency. Hot OCIDs (more than ``merge_partial.BATCH`` releases —
 reference issue #460, compiler.py:61-62) route through the two-phase
@@ -23,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kingfisher_process_spark import store as store_mod
 from kingfisher_process_spark.operators import merge as merge_mod
 from kingfisher_process_spark.operators.grouped import grouped_apply_sorted_arrow
 from kingfisher_process_spark.store import Store, with_sequential_ids
@@ -145,12 +153,22 @@ def compile_collection(store: Store, parent_id: int, compiled_collection_id: int
       stats job computes it for free — loader.store_items), passing
       ``max_per_ocid`` ≤ batch skips even the detection job.
     - ``True`` / ``False``: force one path (tests, benchmarks).
+
+    A driver-scale parent — at most ``store.DRIVER_COMPILE_MAX`` releases
+    by its footer count, payloads within ``DRIVER_APPEND_MAX_BYTES`` —
+    compiles on the driver instead (``_compile_collection_driver``), and
+    ``two_phase``/``batch``/``max_per_ocid`` do not apply there.
     """
     from kingfisher_process_spark.operators import lifecycle
 
     if lifecycle.collection_cancelled(store, parent_id) or \
             lifecycle.collection_cancelled(store, compiled_collection_id):
         return {"compiled": 0, "notes": 0, "cancelled": True}
+    if store.count_rows("release", parent_id) <= store_mod.DRIVER_COMPILE_MAX:
+        out = _compile_collection_driver(store, parent_id, compiled_collection_id,
+                                         extension_schemas)
+        if out is not None:
+            return out
     releases = store.read("release").where(F.col("collection_id") == parent_id)
     data = store.read("data").select(F.col("id").alias("data_id"), "data")
     pkg = store.read("package_data").select(
@@ -207,6 +225,49 @@ def compile_collection(store: Store, parent_id: int, compiled_collection_id: int
     finally:
         for df in temp:
             df.unpersist()
+
+
+def _compile_collection_driver(store: Store, parent_id: int,
+                               compiled_collection_id: int,
+                               extension_schemas: dict[str, dict] | None,
+                               ) -> dict | None:
+    """``compile_collection`` without a Spark job for the merge: the
+    parent's releases, the compiled OCIDs and the payloads are pyarrow
+    reads, every OCID merges through ``_merge_rows`` (the Spark walk's
+    kernel), and the rows go through the persist tail the Spark path's
+    collect feeds — so the stored rows are the Spark path's. A hot OCID
+    merges single-phase, which test_two_phase_merge.py pins equal to the
+    two-phase merge. None when the payloads pass
+    ``DRIVER_APPEND_MAX_BYTES``: the caller then compiles on Spark."""
+    done = {r["ocid"] for r in store.read_rows(
+        "compiled_release", ["ocid"], collection_ids=[compiled_collection_id])}
+    releases = [r for r in store.read_rows(
+        "release", ["ocid", "release_date", "data_id", "package_data_id"],
+        collection_ids=[parent_id]) if r["ocid"] not in done]
+    datas = store.payloads_by_id(
+        "data", (r["data_id"] for r in releases), store_mod.DRIVER_APPEND_MAX_BYTES)
+    pkgs = store.payloads_by_id(
+        "package_data", (r["package_data_id"] for r in releases),
+        store_mod.DRIVER_APPEND_MAX_BYTES)
+    if datas is None or pkgs is None:
+        return None
+    groups: dict[str, dict[str, list]] = {}
+    for r in releases:
+        if r["data_id"] not in datas:
+            continue  # the Spark path's inner join on data drops it too
+        cols = groups.setdefault(r["ocid"], {
+            "ocid": [], "release_date": [], "data": [], "package_data": []})
+        cols["ocid"].append(r["ocid"])
+        cols["release_date"].append(r["release_date"])
+        cols["data"].append(datas[r["data_id"]])
+        cols["package_data"].append(pkgs.get(r["package_data_id"]))
+    rows = [row for cols in groups.values()
+            for row in _merge_rows(cols, extension_schemas)]
+    items = [r for r in rows if r["row_kind"] == "item"]
+    _persist_compiled_driver(store, compiled_collection_id, items)
+    n_notes = _persist_notes_driver(
+        store, compiled_collection_id, [r for r in rows if r["row_kind"] == "note"])
+    return {"compiled": len(items), "notes": n_notes}
 
 
 # Key sets (hot OCIDs, dirty OCIDs) collect to a driver-local relation
@@ -529,32 +590,43 @@ def persist_compiled(store: Store, collection_id: int, compiled: DataFrame) -> d
     n = kind_counts.get("item", 0)
 
     if n <= DRIVER_APPEND_MAX and item_bytes <= DRIVER_APPEND_MAX_BYTES:
-        # driver-scale compile output: ONE collect off the cache feeds
-        # payload dedup (pruned broadcast-semi-join lookup + pyarrow
-        # append), rank assignment (sort by ocid), and both envelope
-        # appends — replacing the distributed dedup + id-shuffle + three
-        # write jobs. The 100 TB path is the else-branch; this is the
-        # many-small-collections path (the reference's common case).
-        _persist_compiled_driver(store, collection_id, items)
+        # driver-scale compile output: ONE collect off the cache feeds the
+        # driver persist tail the driver-side compile also writes through
+        # — replacing the distributed dedup + id-shuffle + three write
+        # jobs. The 100 TB path is the else-branch.
+        _persist_compiled_driver(store, collection_id, items.select(
+            "ocid", "release_date", "hash_md5", "merged").collect())
     else:
         _persist_compiled_distributed(store, collection_id, items, n)
 
-    n_notes = _persist_notes(store, collection_id, compiled, kind_counts)
+    n_notes = kind_counts.get("note", 0)
+    if n_notes:
+        notes = compiled.where(F.col("row_kind") == "note")
+        if n_notes <= DRIVER_APPEND_MAX:
+            _persist_notes_driver(store, collection_id, notes.select(
+                "ocid", "note_code", "note", "note_data").collect())
+        else:
+            _persist_notes_distributed(store, collection_id, notes)
     compiled.unpersist()
     return {"compiled": n, "notes": n_notes}
 
 
-def _persist_compiled_driver(store: Store, collection_id: int, items: DataFrame) -> int:
+def _persist_compiled_driver(store: Store, collection_id: int, rows: list) -> int:
+    """Persist compiled item rows (``ocid``, ``release_date``,
+    ``hash_md5``, ``merged``) held on the driver: payload dedup (a pruned
+    broadcast-semi-join lookup of the hashes + pyarrow append), ids in
+    ocid order, and both envelope appends."""
     from kingfisher_process_spark.sources.loader import driver_dedup_pairs
 
-    rows = items.select("ocid", "release_date", "hash_md5", "merged").collect()
+    if not rows:
+        return 0
     uniq: dict[str, str] = {}
     for r in rows:
         uniq.setdefault(r["hash_md5"], r["merged"])
     mapping = driver_dedup_pairs(store, "data", sorted(uniq.items()))
     # ocid order keeps the parquet min/max stats property store.append's
     # sortWithinPartitions("ocid") provides on the distributed path
-    rows.sort(key=lambda r: r["ocid"])
+    rows = sorted(rows, key=lambda r: r["ocid"])
     cf_base = store.next_id("collection_file")
     cr_base = store.next_id("compiled_release")
     store.append_rows("collection_file", [
@@ -616,41 +688,42 @@ def _persist_compiled_distributed(store: Store, collection_id: int,
     pinned_r.unpersist()
 
 
-def _persist_notes(store: Store, collection_id: int, compiled: DataFrame,
-                   kind_counts: dict) -> int:
-    from kingfisher_process_spark.store import DRIVER_APPEND_MAX
+def _persist_notes_driver(store: Store, collection_id: int, rows: list) -> int:
+    """Append note rows (``ocid``, ``note_code``, ``note``,
+    ``note_data``) held on the driver, ids in the order the distributed
+    path sorts by."""
+    from datetime import datetime, timezone
 
-    n_notes = kind_counts.get("note", 0)
-    if n_notes:
-        notes = compiled.where(F.col("row_kind") == "note")
-        nb = store.next_id("collection_note")
-        if n_notes <= DRIVER_APPEND_MAX:
-            from datetime import datetime, timezone
+    if not rows:
+        return 0
+    rows = sorted(rows, key=lambda r: (r["ocid"] or "", r["note_code"] or "",
+                                       r["note"] or ""))
+    nb = store.next_id("collection_note")
+    now = datetime.now(timezone.utc)
+    store.append_rows("collection_note", [
+        {"id": nb + i, "collection_id": collection_id, "note": r["note"],
+         "data": r["note_data"], "stored_at": now, "code": r["note_code"]}
+        for i, r in enumerate(rows)
+    ])
+    store.advance_next_id("collection_note", nb + len(rows))
+    return len(rows)
 
-            rows = notes.select("ocid", "note_code", "note", "note_data").collect()
-            # same deterministic order the distributed path sorts by
-            rows.sort(key=lambda r: (r["ocid"] or "", r["note_code"] or "",
-                                     r["note"] or ""))
-            now = datetime.now(timezone.utc)
-            store.append_rows("collection_note", [
-                {"id": nb + i, "collection_id": collection_id, "note": r["note"],
-                 "data": r["note_data"], "stored_at": now, "code": r["note_code"]}
-                for i, r in enumerate(rows)
-            ])
-        else:
-            noted, n_notes, pinned_n = with_sequential_ids(
-                notes, nb, order_by=["ocid", "note_code", "note"], mode="hash")
-            store.append("collection_note", noted.select(
-                "id",
-                F.lit(collection_id).alias("collection_id"),
-                "note",
-                F.col("note_data").alias("data"),
-                F.current_timestamp().alias("stored_at"),
-                F.col("note_code").alias("code"),
-            ))
-            pinned_n.unpersist()
-        store.advance_next_id("collection_note", nb + n_notes)
-    return n_notes
+
+def _persist_notes_distributed(store: Store, collection_id: int,
+                               notes: DataFrame) -> None:
+    nb = store.next_id("collection_note")
+    noted, n_notes, pinned_n = with_sequential_ids(
+        notes, nb, order_by=["ocid", "note_code", "note"], mode="hash")
+    store.append("collection_note", noted.select(
+        "id",
+        F.lit(collection_id).alias("collection_id"),
+        "note",
+        F.col("note_data").alias("data"),
+        F.current_timestamp().alias("stored_at"),
+        F.col("note_code").alias("code"),
+    ))
+    pinned_n.unpersist()
+    store.advance_next_id("collection_note", nb + n_notes)
 
 
 # ---------------------------------------------------------------------------

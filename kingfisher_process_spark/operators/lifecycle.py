@@ -13,7 +13,7 @@ Every catalog read here is driver-side (``Store.read_rows``, pruned to the
 collections at hand; finish counts from parquet footers via
 ``Store.count_rows``), so lifecycle gates, notes and finish run no Spark
 job. Spark runs only over data: the metadata endpoint's compiled-release
-aggregate and the orphan-data anti-join.
+aggregate above the driver gate and the orphan-data anti-join.
 """
 
 from __future__ import annotations
@@ -23,6 +23,7 @@ from datetime import datetime, timezone
 import pyarrow.dataset as ds
 from pyspark.sql import functions as F
 
+from kingfisher_process_spark import store as store_mod
 from kingfisher_process_spark.store import Store
 
 TRANSFORM_UPGRADE = "upgrade-1-0-to-1-1"
@@ -270,18 +271,31 @@ def collection_metadata(store: Store, collection_id: int) -> dict:
     against ``collection.get_root_parent()`` — derived collections carry
     no release/record rows of their own).
 
-    The compiled-release aggregate is the endpoint's only Spark job; the
+    The compiled-release aggregate reads the partition's ``(ocid,
+    release_date)`` on the driver when its footer count is within
+    ``DRIVER_APPEND_MAX``, and is one Spark aggregate above that; the
     package sample is a driver-side scan that stops at the root's first
     envelope row with a package, then one package_data row by id."""
-    crs = store.read("compiled_release").where(F.col("collection_id") == collection_id)
-    today = datetime.now(tz=timezone.utc).date().isoformat()
-    agg = crs.where(
-        (F.col("release_date") > "1970-01-01") & (F.col("release_date") <= today + "~")
-    ).agg(
-        F.substring(F.max("ocid"), 1, 11).alias("ocid_prefix"),
-        F.min("release_date").alias("published_from"),
-        F.max("release_date").alias("published_to"),
-    ).collect()[0]
+    lo, hi = "1970-01-01", datetime.now(tz=timezone.utc).date().isoformat() + "~"
+    if store.count_rows("compiled_release", collection_id) <= store_mod.DRIVER_APPEND_MAX:
+        rows = [r for r in store.read_rows("compiled_release", ["ocid", "release_date"],
+                                           collection_ids=[collection_id])
+                if r["release_date"] is not None and lo < r["release_date"] <= hi]
+        ocids = [r["ocid"] for r in rows if r["ocid"] is not None]
+        dates = [r["release_date"] for r in rows]
+        meta = {"ocid_prefix": max(ocids)[:11] if ocids else None,
+                "published_from": min(dates, default=None),
+                "published_to": max(dates, default=None)}
+    else:
+        crs = store.read("compiled_release").where(
+            F.col("collection_id") == collection_id)
+        meta = crs.where(
+            (F.col("release_date") > lo) & (F.col("release_date") <= hi)
+        ).agg(
+            F.substring(F.max("ocid"), 1, 11).alias("ocid_prefix"),
+            F.min("release_date").alias("published_from"),
+            F.max("release_date").alias("published_to"),
+        ).collect()[0].asDict()
 
     rows = {r["id"]: r for r in store.read_rows("collection")}
     root_id = collection_id
@@ -297,7 +311,6 @@ def collection_metadata(store: Store, collection_id: int) -> dict:
                                   ds.field("id") == env["package_data_id"])
         if pkg:
             break
-    meta = dict(agg.asDict())
     if pkg:
         import json as _json
 

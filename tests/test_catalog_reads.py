@@ -99,7 +99,8 @@ def test_polls_and_finish_run_no_spark_job(spark, family):
     with spark_jobs(spark) as jobs:
         lifecycle.finish_collections(store, list(ids.values()))
     assert jobs == [0]
-    # the compiled-release aggregate is the metadata endpoint's only job
+    # the compiled-release aggregate is the metadata endpoint's only possible
+    # Spark work (none while the compiled partition is driver-scale)
     with spark_jobs(spark) as jobs:
         status, meta = call(app, "GET", f"/api/collections/{comp}/metadata/")
     assert status == 200 and meta["license"] == "CC-BY"

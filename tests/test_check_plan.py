@@ -5,6 +5,8 @@ second time."""
 
 from __future__ import annotations
 
+import pytest
+
 from kingfisher_process_spark.operators.check import check_collection
 from kingfisher_process_spark.pipeline import process_collection
 from kingfisher_process_spark.store import Store
@@ -31,6 +33,7 @@ def _subtrees(plan: str, marker: str) -> list[list[str]]:
     return out
 
 
+@pytest.mark.usefixtures("spark_stages")
 def test_check_validates_downstream_of_the_id_sort(spark, tmp_path):
     store = Store(spark, str(tmp_path / "store"))
     path = write(tmp_path, "pkg.json", release_package(RELEASES))

@@ -18,6 +18,10 @@ from kingfisher_process_spark.pipeline import process_collection
 from kingfisher_process_spark.store import Store
 from kingfisher_process_spark.util import canonical_json
 
+# the subject is the Spark compile plan, which a test-sized collection
+# reaches only with the driver-scale gate off
+pytestmark = pytest.mark.usefixtures("spark_stages")
+
 PANDAS_NODES = ("FlatMapGroupsInPandas", "MapInPandas")
 # one formatted-plan tree line: "<indent>[* ]Name ... (id)"
 TREE_LINE = re.compile(r"^([ :+\-|]*)(?:\* )?(\w+)[^(\n]*\((\d+)\)")

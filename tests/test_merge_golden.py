@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from kingfisher_process_spark.operators.merge import compile_releases
 
 
@@ -296,6 +298,7 @@ def test_extension_flag_removal():
         {"id": "A", "scheme": "x"}, {"id": "B", "scheme": "y"}]
 
 
+@pytest.mark.usefixtures("spark_stages")
 def test_extension_schemas_in_spark_pipeline(tmp_path):
     """End-to-end through the distributed compile: extension_schemas passed
     to compile_collection alters the compiled payload, on both the

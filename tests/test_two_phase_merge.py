@@ -102,6 +102,7 @@ def test_property_equivalence(releases, batch):
 
 # -- Spark end-to-end --------------------------------------------------------
 
+@pytest.mark.usefixtures("spark_stages")
 def test_spark_two_phase_matches_single_phase(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -187,6 +188,7 @@ def _compile_both_ways(spark, tmp_path, pkgs, extension_schemas, batch):
     return run(False), run(True)
 
 
+@pytest.mark.usefixtures("spark_stages")
 def test_extension_union_is_group_level_not_batch_level(spark, tmp_path):
     """An extension declared by a package covering only SOME of an OCID's
     releases must still govern every two-phase batch: merge rules derive
@@ -218,6 +220,7 @@ def test_extension_union_is_group_level_not_batch_level(spark, tmp_path):
     assert single == double
 
 
+@pytest.mark.usefixtures("spark_stages")
 def test_incomposable_batch_disqualifies_whole_ocid(spark, tmp_path):
     """An OCID with one incomposable batch among composable ones must fall
     back to single-phase as a WHOLE: exactly one compiled row, equal to
@@ -308,6 +311,7 @@ def test_skew_routing_spares_cold_ocids_the_two_phase_passes(spark):
     assert got == want and len(got) == 5
 
 
+@pytest.mark.usefixtures("spark_stages")
 def test_compile_collection_leaves_no_persisted_relations(spark, tmp_path):
     """The hot-set resolve caches its aggregate for exactly one
     materialization and must unpersist before compile_collection
