@@ -444,8 +444,8 @@ def _check_collection_driver(store: Store, collection_id: int, kind: str,
     checks and their payloads are pyarrow reads, ``check_item`` runs per
     item in item-id order, and the rows are appended with ``append_rows``
     under the ids the Spark path's range sort gives. None when the
-    payloads pass ``DRIVER_APPEND_MAX_BYTES``: the caller then checks on
-    Spark."""
+    payload scan passes ``DRIVER_APPEND_MAX_BYTES`` (``payloads_by_id``):
+    the caller then checks on Spark."""
     table, check_table, fk = _CHECK_TABLES[kind]
     items = store.read_rows(table, ["id", "data_id", "package_data_id"],
                             collection_ids=[collection_id])
@@ -478,7 +478,7 @@ def check_collection(store: Store, collection_id: int, kind: str = "release",
     against existing checks — addchecks.py:35-44 shape). Returns row count.
 
     A driver-scale collection — at most ``store.DRIVER_CHECK_MAX`` items by
-    its footer count, payloads within ``DRIVER_APPEND_MAX_BYTES`` — is
+    its footer count, payload scan within ``DRIVER_APPEND_MAX_BYTES`` — is
     checked on the driver (``_check_collection_driver``); larger ones run
     the Spark path below."""
     from kingfisher_process_spark.operators import lifecycle

@@ -2,7 +2,7 @@
 OCID and merge each group (reference: process/processors/compiler.py:21-84).
 
 A driver-scale parent (``store.DRIVER_COMPILE_MAX`` releases by its footer
-count, payloads within ``DRIVER_APPEND_MAX_BYTES``) compiles on the driver,
+count, payload scan within ``DRIVER_APPEND_MAX_BYTES``) compiles on the driver,
 as the reference compiles a collection in one worker: pyarrow reads, the
 same per-OCID kernel (``_merge_rows``, single-phase even for a hot OCID),
 and the same persist tail, so the stored rows are the Spark path's.
@@ -155,7 +155,7 @@ def compile_collection(store: Store, parent_id: int, compiled_collection_id: int
     - ``True`` / ``False``: force one path (tests, benchmarks).
 
     A driver-scale parent — at most ``store.DRIVER_COMPILE_MAX`` releases
-    by its footer count, payloads within ``DRIVER_APPEND_MAX_BYTES`` —
+    by its footer count, payload scan within ``DRIVER_APPEND_MAX_BYTES`` —
     compiles on the driver instead (``_compile_collection_driver``), and
     ``two_phase``/``batch``/``max_per_ocid`` do not apply there.
     """
@@ -237,8 +237,9 @@ def _compile_collection_driver(store: Store, parent_id: int,
     kernel), and the rows go through the persist tail the Spark path's
     collect feeds — so the stored rows are the Spark path's. A hot OCID
     merges single-phase, which test_two_phase_merge.py pins equal to the
-    two-phase merge. None when the payloads pass
-    ``DRIVER_APPEND_MAX_BYTES``: the caller then compiles on Spark."""
+    two-phase merge. None when the payload scan passes
+    ``DRIVER_APPEND_MAX_BYTES`` (``payloads_by_id``): the caller then
+    compiles on Spark."""
     done = {r["ocid"] for r in store.read_rows(
         "compiled_release", ["ocid"], collection_ids=[compiled_collection_id])}
     releases = [r for r in store.read_rows(

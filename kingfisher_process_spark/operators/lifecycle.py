@@ -12,8 +12,7 @@ counts, soft-delete.
 Every catalog read here is driver-side (``Store.read_rows``, pruned to the
 collections at hand; finish counts from parquet footers via
 ``Store.count_rows``), so lifecycle gates, notes and finish run no Spark
-job. Spark runs only over data: the metadata endpoint's compiled-release
-aggregate above the driver gate and the orphan-data anti-join.
+job. Spark runs only over data: the orphan-data anti-join.
 """
 
 from __future__ import annotations
@@ -23,7 +22,6 @@ from datetime import datetime, timezone
 import pyarrow.dataset as ds
 from pyspark.sql import functions as F
 
-from kingfisher_process_spark import store as store_mod
 from kingfisher_process_spark.store import Store
 
 TRANSFORM_UPGRADE = "upgrade-1-0-to-1-1"
@@ -271,31 +269,28 @@ def collection_metadata(store: Store, collection_id: int) -> dict:
     against ``collection.get_root_parent()`` — derived collections carry
     no release/record rows of their own).
 
-    The compiled-release aggregate reads the partition's ``(ocid,
-    release_date)`` on the driver when its footer count is within
-    ``DRIVER_APPEND_MAX``, and is one Spark aggregate above that; the
-    package sample is a driver-side scan that stops at the root's first
-    envelope row with a package, then one package_data row by id."""
+    The compiled-release aggregate streams the partition's ``(ocid,
+    release_date)`` through pyarrow on the driver, one batch at a time: on
+    4 CPUs it took 0.6 s at 8M rows against 1.8 s for the Spark aggregate
+    it replaces, and 0.15 s against 0.66 s at 2M. The package sample is a
+    driver-side scan that stops at the root's first envelope row with a
+    package, then one package_data row by id. No Spark job."""
+    import pyarrow.compute as pc
+
+    date = ds.field("release_date")
     lo, hi = "1970-01-01", datetime.now(tz=timezone.utc).date().isoformat() + "~"
-    if store.count_rows("compiled_release", collection_id) <= store_mod.DRIVER_APPEND_MAX:
-        rows = [r for r in store.read_rows("compiled_release", ["ocid", "release_date"],
-                                           collection_ids=[collection_id])
-                if r["release_date"] is not None and lo < r["release_date"] <= hi]
-        ocids = [r["ocid"] for r in rows if r["ocid"] is not None]
-        dates = [r["release_date"] for r in rows]
-        meta = {"ocid_prefix": max(ocids)[:11] if ocids else None,
-                "published_from": min(dates, default=None),
-                "published_to": max(dates, default=None)}
-    else:
-        crs = store.read("compiled_release").where(
-            F.col("collection_id") == collection_id)
-        meta = crs.where(
-            (F.col("release_date") > lo) & (F.col("release_date") <= hi)
-        ).agg(
-            F.substring(F.max("ocid"), 1, 11).alias("ocid_prefix"),
-            F.min("release_date").alias("published_from"),
-            F.max("release_date").alias("published_to"),
-        ).collect()[0].asDict()
+    ocids, dates = [], []
+    for batch in store.scan("compiled_release", ["ocid", "release_date"],
+                            (ds.field("collection_id") == collection_id)
+                            & (date > lo) & (date <= hi)):
+        ocids.append(pc.max(batch.column("ocid")).as_py())
+        span = pc.min_max(batch.column("release_date")).as_py()
+        dates += [span["min"], span["max"]]
+    top = max((o for o in ocids if o is not None), default=None)
+    dates = [d for d in dates if d is not None]
+    meta = {"ocid_prefix": None if top is None else top[:11],
+            "published_from": min(dates, default=None),
+            "published_to": max(dates, default=None)}
 
     rows = {r["id"]: r for r in store.read_rows("collection")}
     root_id = collection_id

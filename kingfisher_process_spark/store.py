@@ -95,25 +95,30 @@ PARTITIONED_BY_COLLECTION = {"release", "record", "compiled_release", "collectio
 # distributed write's fixed cost ~5x); above it the distributed path keeps
 # the 100 TB posture. The reference's equivalent rows are single-row
 # Postgres INSERTs either way. Readers: the loader (sources.loader.
-# store_items), the compile persist (compile_release.persist_compiled), the
-# compile stage through DRIVER_COMPILE_MAX, and the metadata endpoint's
-# compiled-release aggregate (lifecycle.collection_metadata).
+# store_items) and the compile persist (compile_release.persist_compiled);
+# the driver-scale compile and check stages have their own gates below.
 DRIVER_APPEND_MAX = 20_000
 
 # Stage gates, read against a partition's parquet footer row count
 # (count_rows — exact, no rows read). At or under them the stage runs its
 # kernels on the driver over a pyarrow read (payloads via payloads_by_id)
 # and writes through append_rows, paying none of Spark's fixed per-stage
-# cost; above them it runs as Spark jobs. compile_collection uses the
-# loader's row gate, under its own name so a test can force the compile
-# onto Spark while the persist tail keeps DRIVER_APPEND_MAX (and its ids
-# stay comparable). check_collection's is lower because validation costs
-# 0.6-1.4 ms per item on one core against 0.04-0.19 ms for a merge: against
-# ~2.2 s of Spark fixed cost the check breaks even near 3.7k items at 4
-# CPUs and 2.6k at 32 (at 2,000 items on 4 CPUs: 3.1 s on the driver, 5.0 s
-# on Spark). Both stages also fall back to Spark when their payloads pass
+# cost; above them it runs as Spark jobs. Both were set from alternating
+# driver/Spark runs of the stage on 4 CPUs (3 each, medians):
+# - compile: bulk-shaped releases (OCDS 1.1, two hot OCIDs) took 1.07 s
+#   on the driver vs 3.61 s on Spark at 10k releases and 1.66 vs 3.09 s at
+#   20k; the heavier upgraded OCDS 1.0 releases of the crawl workload took
+#   2.08 vs 3.08 s at 10k and broke even at 20k (3.18 vs 3.15 s). The
+#   driver merge is one core against Spark's all, so more CPUs move the
+#   crossover down; the gate sits at 10k, where the heavier releases still
+#   gain 1.5x on 4 CPUs.
+# - check: validation costs 0.6-1.4 ms per item on one core against
+#   0.04-0.19 ms for a merge, so against ~2.2 s of Spark fixed cost it
+#   breaks even near 3.7k items at 4 CPUs and 2.6k at 32; at 2,000 items
+#   the driver took 3.1 s and Spark 5.0 s.
+# Both stages also fall back to Spark when the payload scan passes
 # DRIVER_APPEND_MAX_BYTES.
-DRIVER_COMPILE_MAX = DRIVER_APPEND_MAX
+DRIVER_COMPILE_MAX = 10_000
 DRIVER_CHECK_MAX = 2_000
 
 # Driver-scale catalog tables: O(#collections) rows, not O(data). Both
@@ -144,7 +149,7 @@ DRIVER_WRITABLE_TABLES = METADATA_TABLES | {
 # Whole JSON documents: the pyarrow writer keeps no min/max statistics for
 # them (full-length min/max strings doubled a driver-written file's size,
 # and no filter ever prunes on a payload). The other columns keep theirs:
-# footer pruning (payloads_by_id, next_id) and Spark's ocid filters use
+# footer pruning (payloads_by_id, present_ids) and Spark's ocid filters use
 # the id and ocid statistics.
 PAYLOAD_COLUMNS = {"data", "cove_output"}
 
@@ -328,45 +333,65 @@ class Store:
                 .head(1).to_pylist())
         return rows[0] if rows else None
 
-    def _id_scan(self, table: str, column: str, ids, columns: list[str]):
-        """pyarrow scanner over the rows whose ``column`` is in ``ids``
-        (None when there is nothing to scan). The min/max bound comes first
-        so footer statistics skip the files and row groups outside the
-        ids' range before ``isin`` reads a row."""
+    def scan(self, table: str, columns: list[str], where):
+        """The rows matching the pyarrow expression ``where`` as a stream
+        of record batches, read on the driver (no Spark job) and held one
+        batch at a time, so a caller's aggregate costs O(batch) memory at
+        any partition size."""
+        if not self.exists(table):
+            return iter(())
+        return self._dataset(table).scanner(columns=columns, filter=where).to_batches()
+
+    @staticmethod
+    def _id_filters(column: str, ids):
+        """``(bound, match)`` pyarrow filters for the rows whose ``column``
+        is in ``ids``, or None when there are no ids. ``bound`` is the ids'
+        min/max, which footer statistics prune files and row groups by;
+        ``match`` adds the ``isin``."""
         import pyarrow.dataset as ds
 
         ids = sorted({i for i in ids if i is not None})
-        if not ids or not self.exists(table):
+        if not ids:
             return None
         field = ds.field(column)
-        return self._dataset(table).scanner(
-            columns=columns,
-            filter=(field >= ids[0]) & (field <= ids[-1]) & field.isin(ids))
+        bound = (field >= ids[0]) & (field <= ids[-1])
+        return bound, bound & field.isin(ids)
 
     def payloads_by_id(self, table: str, ids, max_bytes: int) -> dict[int, str] | None:
         """``{id: data}`` for the ``data``/``package_data`` rows with these
-        ids, read on the driver (no Spark job). Returns None as soon as
-        the payloads read pass ``max_bytes`` — the caller's cue to take its
-        Spark path instead."""
-        import pyarrow.compute as pc
-
-        scan = self._id_scan(table, "id", ids, ["id", "data"])
-        out: dict[int, str] = {}
-        total = 0
-        for batch in scan.to_batches() if scan is not None else ():
-            total += pc.sum(pc.binary_length(batch.column("data"))).as_py() or 0
-            if total > max_bytes:
+        ids, read on the driver (no Spark job). Returns None — the caller's
+        cue to take its Spark path — when the scan would decode more than
+        ``max_bytes`` of payload. That is counted from the footers before
+        any row is read: the payload column's size in every row group whose
+        ``id`` statistics meet the ids' min/max (a row group without them
+        counts in full). Payload dedup maps a repeated payload to an older
+        row's id, so a small collection's ids can span most of the table;
+        the bytes that match would not show that."""
+        filters = self._id_filters("id", ids)
+        if filters is None or not self.exists(table):
+            return {}
+        bound, match = filters
+        dataset = self._dataset(table)
+        scanned = 0
+        for frag in dataset.get_fragments(filter=bound):
+            meta = frag.metadata
+            col = meta.schema.names.index("data")
+            for part in frag.split_by_row_group(filter=bound):
+                scanned += sum(meta.row_group(g.id).column(col).total_uncompressed_size
+                               for g in part.row_groups)
+            if scanned > max_bytes:
                 return None
-            out.update(zip(batch.column("id").to_pylist(),
-                           batch.column("data").to_pylist()))
-        return out
+        got = dataset.to_table(columns=["id", "data"], filter=match)
+        return dict(zip(got.column("id").to_pylist(), got.column("data").to_pylist()))
 
     def present_ids(self, table: str, column: str, ids) -> set[int]:
         """The subset of ``ids`` that occurs in ``table.column``, read on
-        the driver with the same footer-pruned scan as payloads_by_id."""
-        scan = self._id_scan(table, column, ids, [column])
-        return set() if scan is None else set(
-            scan.to_table().column(column).to_pylist())
+        the driver with the same footer-pruned filter as payloads_by_id."""
+        filters = self._id_filters(column, ids)
+        if filters is None or not self.exists(table):
+            return set()
+        return set(self._dataset(table).to_table(
+            columns=[column], filter=filters[1]).column(column).to_pylist())
 
     def count_rows(self, table: str, collection_id: int) -> int:
         """Exact row count of one collection's partition from its parquet
@@ -393,9 +418,8 @@ class Store:
         """Next surrogate id (driver-side max+1; ids within a batch are
         assigned distributed via per-partition offsets —
         with_sequential_ids). Cached between writes: writers that know the
-        ids they appended call advance_next_id, everything else re-derives
-        the max after the cache is invalidated by _write — from the footer
-        statistics, or by a max() scan where a file lacks them."""
+        ids they appended call advance_next_id, everything else falls back
+        to a max() scan after the cache is invalidated by _write."""
         if table in self._next_ids:
             return self._next_ids[table]
         if not self.exists(table):
@@ -403,35 +427,11 @@ class Store:
         elif table in METADATA_TABLES:
             ids = [r["id"] for r in self.read_rows(table, ["id"]) if r["id"] is not None]
             nid = (max(ids) if ids else 0) + 1
-        elif (top := self._footer_max_id(table)) is not None:
-            nid = top + 1
         else:
             row = self.read(table).agg(F.max("id").alias("m")).collect()[0]
             nid = (row["m"] or 0) + 1
         self._next_ids[table] = nid
         return nid
-
-    def _footer_max_id(self, table: str) -> int | None:
-        """Largest ``id`` from the files' footer statistics (both writers
-        keep them for ``id``): reads no rows, runs no Spark job. None when
-        a non-empty row group carries no min/max for it."""
-        top = 0
-        for root, dirs, files in os.walk(self.path(table)):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                meta = pq.ParquetFile(os.path.join(root, f)).metadata
-                col = meta.schema.names.index("id")
-                for g in range(meta.num_row_groups):
-                    group = meta.row_group(g)
-                    stats = group.column(col).statistics
-                    if stats is not None and stats.null_count == group.num_rows:
-                        continue
-                    if stats is None or not stats.has_min_max:
-                        return None
-                    top = max(top, stats.max)
-        return top
 
     def advance_next_id(self, table: str, value: int) -> None:
         """Record the id watermark after an append whose ids are known."""

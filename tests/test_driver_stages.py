@@ -8,6 +8,7 @@ fixture (conftest.py) forces the Spark path for the comparison."""
 from __future__ import annotations
 
 import json
+from datetime import datetime, timezone
 
 import pyarrow.parquet as pq
 import pytest
@@ -233,11 +234,53 @@ def test_stages_fall_back_to_spark_past_a_gate(spark, tmp_path, monkeypatch, gat
     assert check_mod.check_collection(store_s, parent) == n_checked
     assert persisted and validated  # both stages ran their Spark path
     assert (_stored(store_s, comp), _table(store_s, "release_check")) == want
-    # the id watermark of Spark-written files comes from their footers
-    store_s._next_ids.clear()
-    with spark_jobs(spark) as jobs:
-        assert store_s.next_id("release_check") == n_checked + 1
-    assert jobs == [0]
+
+
+def test_payload_gate_counts_the_id_range_a_recrawl_scans(
+        spark, tmp_path, monkeypatch):
+    """A re-crawl: the third collection re-publishes the first one's
+    releases and adds one. Payload dedup gives it the first collection's
+    data ids and one id past the second collection's large payloads, so
+    the scan bounded by its ids' min/max reads those too. The byte gate
+    counts them: at the collection's own payload bytes both stages take
+    their Spark path, and store the rows the driver path stores."""
+    big = release_package([_rel(f"ocds-big-{i}", "b", "2020-02-01T00:00:00Z",
+                                description="x" * 5000) for i in range(20)])
+    recrawl = release_package(HOT_PKGS[0]["releases"]
+                              + [_rel("ocds-new", "n", "2020-03-01T00:00:00Z")])
+
+    def load(name):
+        store = Store(spark, str(tmp_path / name))
+        roots = [process_collection(
+            spark, store, f"{name}{k}", "2020-01-01 00:00:00",
+            [write(tmp_path, f"{name}-{k}.json", pkg)])["collections"]["root"]
+            for k, pkg in enumerate((HOT_PKGS[0], big, recrawl))]
+        comp = lifecycle.create_collections(store, name + "c", "2020-01-01 00:00:00")["root"]
+        return store, roots, comp
+
+    def data_ids(store, collection_id):
+        return {r["data_id"] for r in store.read_rows(
+            "release", ["data_id"], collection_ids=[collection_id])}
+
+    store_d, (_, big_root, parent), comp = load("driver")
+    ids, big_ids = data_ids(store_d, parent), data_ids(store_d, big_root)
+    assert min(ids) < min(big_ids) and max(big_ids) < max(ids)
+    matched = sum(len(r["data"]) for r in store_d.read_rows("data") if r["id"] in ids)
+    assert store_d.payloads_by_id("data", ids, matched) is None
+    got = store_d.payloads_by_id("data", ids, 1 << 30)
+    assert set(got) == ids and sum(map(len, got.values())) == matched
+    assert cr.compile_collection(store_d, parent, comp)["compiled"] == 5
+    n_checked = check_mod.check_collection(store_d, parent)
+    want = _stored(store_d, comp), _table(store_d, "release_check")
+
+    store_s, _, _ = load("spark")
+    monkeypatch.setattr(store_mod, "DRIVER_APPEND_MAX_BYTES", matched)
+    persisted = _spy(monkeypatch, cr, "persist_compiled")
+    validated = _spy(monkeypatch, check_mod, "_validated")
+    assert cr.compile_collection(store_s, parent, comp)["compiled"] == 5
+    assert check_mod.check_collection(store_s, parent) == n_checked
+    assert persisted and validated
+    assert (_stored(store_s, comp), _table(store_s, "release_check")) == want
 
 
 def test_close_runs_no_spark_job_to_check_and_at_most_two_to_compile(
@@ -284,15 +327,15 @@ def test_driver_files_keep_statistics_for_ids_only(spark, tmp_path):
                 assert group.column(names.index(payload)).statistics is None \
                     or not group.column(names.index(payload)).statistics.has_min_max
                 assert group.column(names.index("id")).statistics.has_min_max
-    # Spark reads the driver-written files, and the footer max is the id max
-    store._next_ids.clear()
-    assert store.next_id("release_check") == store.read("release_check").agg(
-        F.max("id")).collect()[0][0] + 1
+    # Spark reads the driver-written files
+    assert store.read("release_check").count() == store.count_rows("release", parent)
 
 
-def test_driver_metadata_aggregate_equals_spark(spark, tmp_path, monkeypatch):
+def test_driver_metadata_aggregate_equals_spark(spark, tmp_path):
     """Rows outside the date filter (too early, in the future, empty, null)
-    carry the largest OCIDs, so the filter shows in every output field."""
+    carry the largest OCIDs, so the filter shows in every output field. The
+    oracle is the Spark aggregate the endpoint ran before it read on the
+    driver."""
     store = Store(spark, str(tmp_path / "store"))
     cid = 7
     rows = [("ocds-3aaaaaaaa-1", "2020-05-01T00:00:00Z"),
@@ -311,14 +354,25 @@ def test_driver_metadata_aggregate_equals_spark(spark, tmp_path, monkeypatch):
     store.append_rows("compiled_release", [
         {"id": 100, "collection_id": cid + 1, "collection_file_id": 100,
          "ocid": "ocds-zzzzzzzzzz", "release_date": "2000-01-01", "data_id": 1}])
+
+    def spark_aggregate(collection_id):
+        today = datetime.now(tz=timezone.utc).date().isoformat()
+        return store.read("compiled_release").where(
+            (F.col("collection_id") == collection_id)
+            & (F.col("release_date") > "1970-01-01")
+            & (F.col("release_date") <= today + "~")
+        ).agg(
+            F.substring(F.max("ocid"), 1, 11).alias("ocid_prefix"),
+            F.min("release_date").alias("published_from"),
+            F.max("release_date").alias("published_to"),
+        ).collect()[0].asDict()
+
     with spark_jobs(spark) as jobs:
         driver = lifecycle.collection_metadata(store, cid)
-    monkeypatch.setattr(store_mod, "DRIVER_APPEND_MAX", 0)
-    assert lifecycle.collection_metadata(store, cid) == driver
+        empty = lifecycle.collection_metadata(store, cid + 5)
     assert jobs == [0]
-    assert driver == {"ocid_prefix": "ocds-3aaaaa", "published_from": "2019-01-01",
-                      "published_to": "2021-01-01T00:00:00Z"}
-    empty = lifecycle.collection_metadata(store, cid + 5)
-    monkeypatch.undo()
-    assert lifecycle.collection_metadata(store, cid + 5) == empty == {
+    assert driver == spark_aggregate(cid) == {
+        "ocid_prefix": "ocds-3aaaaa", "published_from": "2019-01-01",
+        "published_to": "2021-01-01T00:00:00Z"}
+    assert empty == spark_aggregate(cid + 5) == {
         "ocid_prefix": None, "published_from": None, "published_to": None}
