@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kingfisher_process_spark import store as store_mod
+from kingfisher_process_spark.operators import lifecycle
 from kingfisher_process_spark.operators import merge as merge_mod
 from kingfisher_process_spark.operators.grouped import grouped_apply_sorted_arrow
 from kingfisher_process_spark.store import Store, with_sequential_ids
@@ -159,8 +160,6 @@ def compile_collection(store: Store, parent_id: int, compiled_collection_id: int
     compiles on the driver instead (``_compile_collection_driver``), and
     ``two_phase``/``batch``/``max_per_ocid`` do not apply there.
     """
-    from kingfisher_process_spark.operators import lifecycle
-
     if lifecycle.collection_cancelled(store, parent_id) or \
             lifecycle.collection_cancelled(store, compiled_collection_id):
         return {"compiled": 0, "notes": 0, "cancelled": True}
@@ -693,21 +692,10 @@ def _persist_notes_driver(store: Store, collection_id: int, rows: list) -> int:
     """Append note rows (``ocid``, ``note_code``, ``note``,
     ``note_data``) held on the driver, ids in the order the distributed
     path sorts by."""
-    from datetime import datetime, timezone
-
-    if not rows:
-        return 0
     rows = sorted(rows, key=lambda r: (r["ocid"] or "", r["note_code"] or "",
                                        r["note"] or ""))
-    nb = store.next_id("collection_note")
-    now = datetime.now(timezone.utc)
-    store.append_rows("collection_note", [
-        {"id": nb + i, "collection_id": collection_id, "note": r["note"],
-         "data": r["note_data"], "stored_at": now, "code": r["note_code"]}
-        for i, r in enumerate(rows)
-    ])
-    store.advance_next_id("collection_note", nb + len(rows))
-    return len(rows)
+    return lifecycle.add_notes(store, collection_id, [
+        (r["note_code"], r["note"], r["note_data"]) for r in rows])
 
 
 def _persist_notes_distributed(store: Store, collection_id: int,

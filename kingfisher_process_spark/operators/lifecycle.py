@@ -87,14 +87,26 @@ def create_collections(store: Store, source_id: str, data_version: str, *,
     return ids
 
 
+def add_notes(store: Store, collection_id: int,
+              notes: list[tuple[str, str, str | None]]) -> int:
+    """Append ``(code, note, data)`` rows, ids in the given order; one
+    ``stored_at`` (UTC) for the batch. Returns the number appended."""
+    if not notes:
+        return 0
+    nb = store.next_id("collection_note")
+    now = _now()
+    store.append_rows("collection_note", [
+        {"id": nb + i, "collection_id": collection_id, "note": note,
+         "data": data, "stored_at": now, "code": code}
+        for i, (code, note, data) in enumerate(notes)
+    ])
+    store.advance_next_id("collection_note", nb + len(notes))
+    return len(notes)
+
+
 def add_note(store: Store, collection_id: int, code: str, note: str,
              data: str | None = None) -> None:
-    nid = store.next_id("collection_note")
-    store.append_rows("collection_note", [{
-        "id": nid, "collection_id": collection_id, "note": note,
-        "data": data, "stored_at": _now(), "code": code,
-    }])
-    store.advance_next_id("collection_note", nid + 1)
+    add_notes(store, collection_id, [(code, note, data)])
 
 
 STEP_LOAD = "LOAD"

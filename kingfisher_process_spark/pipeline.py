@@ -6,6 +6,14 @@ one synchronous Spark stage DAG: each hop becomes a DataFrame job over the
 parquet store, and the process-manager machinery (steps, optimistic locks,
 requeues — compiler.py:128-181, finisher.py:74-176) reduces to function
 call order.
+
+One stage sequence serves every entry point. ``register_files`` records
+each file with a LOAD step, ``load_pending`` drains those steps (parse,
+store, upgrade mirroring) and ``close_and_process`` closes the collection,
+drains what is left, compiles, checks and finishes. The one-shot
+``process_collection`` is register + close, as the reference's ``load``
+command is (load.py:145-161); ``open_collection`` and the Collect/HTTP
+waves reach the same two functions later.
 """
 
 from __future__ import annotations
@@ -15,7 +23,6 @@ from decimal import Decimal
 
 import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from kingfisher_process_spark.operators import lifecycle
 from kingfisher_process_spark.operators.check import check_collection
@@ -72,10 +79,13 @@ def process_collection(
     check: bool = False,
     sample: bool = False,
     note: str | None = None,
-    two_phase_compile: bool | str = "auto",
     extension_schemas: dict[str, dict] | str | None = None,
 ) -> dict:
-    """Load files into a new collection and run the requested transforms.
+    """Load files into a new collection and run the requested transforms:
+    register every file with its LOAD step, then close the collection —
+    the reference's ``load`` command (load.py:145-161), with the workers'
+    drain → compile → check → finish run synchronously by
+    ``close_and_process``.
 
     ``extension_schemas`` may be a pre-built {url: release-schema-patch}
     dict or a PATH to an offline extension bundle directory
@@ -84,10 +94,6 @@ def process_collection(
 
     Returns {"collections": {...}, "data_type": {...}, counts per stage}.
     """
-    if isinstance(extension_schemas, str):
-        from kingfisher_process_spark.operators.merge import load_extension_bundle
-
-        extension_schemas = load_extension_bundle(extension_schemas)
     ids = lifecycle.create_collections(
         store, source_id, data_version,
         sample=sample, upgrade=upgrade, compile_=compile_, check=check, note=note,
@@ -109,62 +115,21 @@ def process_collection(
         lifecycle.add_note(store, ids["root"], "ERROR", msg)
         result["error"] = msg
         return result
-    except (detect.EmptyFormatError, detect.UnsupportedFormatError,
-            detect.UnknownFormatError, FileNotFoundError) as e:
+    except (detect.FormatError, FileNotFoundError) as e:
         lifecycle.add_note(store, ids["root"], "ERROR", str(e))
         result["error"] = str(e)
         return result
     result["data_type"] = data_type
     lifecycle._update_collection(store, ids["root"], data_type=json.dumps(data_type))
 
-    fmt = data_type["format"]
-    pairs = lifecycle.create_collection_files(store, ids["root"], paths)
-    parsed = parse_files(spark, pairs, data_type).cache()
-    result["load"] = store_items(store, ids["root"], fmt, parsed)
-
-    compile_parent = ids["root"]
-    if upgrade:
-        upg_id = ids["upgraded"]
-        lifecycle._update_collection(store, upg_id, data_type=json.dumps(data_type))
-        upg_pairs = lifecycle.create_collection_files(store, upg_id, paths)
-        upg_by_path = {p: uc for uc, p in upg_pairs}
-        cfid_map = {root_cfid: upg_by_path[p] for root_cfid, p in pairs}
-        upgraded_parsed = _upgrade_parsed(parsed, cfid_map)
-        result["upgrade"] = store_items(store, upg_id, fmt, upgraded_parsed)
-        compile_parent = upg_id
-
-    parsed.unpersist()
-
-    if compile_:
-        comp_id = ids["compiled"]
-        if fmt == detect.RELEASE_PACKAGE:
-            # the load stage's stats job already bounded releases-per-ocid
-            # for the compile parent — lets "auto" skip its skew-detection
-            # job when the collection provably has no hot OCIDs
-            hint = (result.get("upgrade") or result["load"]).get("max_per_ocid")
-            result["compile"] = compile_collection(store, compile_parent, comp_id,
-                                                   two_phase=two_phase_compile,
-                                                   max_per_ocid=hint,
-                                                   extension_schemas=extension_schemas)
-        elif fmt == detect.RECORD_PACKAGE:
-            result["compile"] = compile_records(store, compile_parent, comp_id)
-        else:
-            # compiled-release inputs are already compiled (reference
-            # compilable() never fires for this format)
-            lifecycle.add_note(store, comp_id, "INFO",
-                              "Collection is already compiled; compile step skipped")
-        # compiled collection joins the batch finish at the end (one
-        # catalog swap covers root/upgraded/compiled — synchronous DAG,
-        # same semantics)
-
-    if check:
-        kind = "record" if fmt == detect.RECORD_PACKAGE else "release"
-        target = compile_parent
-        result["check"] = check_collection(store, target, kind,
-                                           extension_schemas=extension_schemas)
-
-    lifecycle.close_collection(store, ids["root"], expected_files_count=len(paths))
-    lifecycle.finish_collections(store, list(ids.values()))
+    register_files(spark, store, ids["root"], paths)
+    out = close_and_process(spark, store, ids["root"],
+                            expected_files_count=len(paths),
+                            extension_schemas=extension_schemas)
+    out.pop("finish")
+    if "upgrade" in out["load"]:
+        out["upgrade"] = out["load"].pop("upgrade")
+    result.update(out)
     return result
 
 
@@ -206,8 +171,7 @@ def open_collection(spark: SparkSession, store: Store, source_id: str,
             msg = f"Source {source_id} yields invalid JSON: {e}"
             lifecycle.add_note(store, ids["root"], "ERROR", msg)
             result["error"] = msg
-        except (detect.EmptyFormatError, detect.UnsupportedFormatError,
-                detect.UnknownFormatError, FileNotFoundError) as e:
+        except (detect.FormatError, FileNotFoundError) as e:
             lifecycle.add_note(store, ids["root"], "ERROR", str(e))
             result["error"] = str(e)
     return result
@@ -236,8 +200,7 @@ def register_files(spark: SparkSession, store: Store, root_id: int,
             data_type = detect.detect_format(files[0]).as_dict()
             lifecycle._update_collection(store, root_id,
                                          data_type=json.dumps(data_type))
-        except (ValueError, detect.EmptyFormatError,
-                detect.UnsupportedFormatError, detect.UnknownFormatError):
+        except (ValueError, detect.FormatError):
             pass
     pairs = lifecycle.create_collection_files(store, root_id, files, urls=urls)
     lifecycle.create_load_steps(store, root_id, pairs)
@@ -282,8 +245,7 @@ def load_pending(spark: SparkSession, store: Store, root_id: int) -> dict:
         first = cf_all[steps[0]["collection_file_id"]]
         try:
             data_type = detect.detect_format(first).as_dict()
-        except (ValueError, detect.EmptyFormatError,
-                detect.UnsupportedFormatError, detect.UnknownFormatError) as e:
+        except (ValueError, detect.FormatError) as e:
             lifecycle.add_note(store, root_id, "ERROR", str(e))
             return {"rows": 0, "notes": 1, "files": 0, "error": str(e)}
         lifecycle._update_collection(store, root_id,
@@ -366,12 +328,21 @@ def close_and_process(spark: SparkSession, store: Store, root_id: int, *,
         comp_id = fam["compiled"]["id"]
         fmt = data_type["format"]
         if fmt == detect.RELEASE_PACKAGE:
+            # a drain that loaded every file has bounded releases-per-ocid
+            # for the compile parent (loader.store_items' stats job), which
+            # lets "auto" skip its skew-detection job; after earlier waves
+            # that bound misses their rows
+            load = result["load"]
+            hint = ((load.get("upgrade") or load).get("max_per_ocid")
+                    if load["files"] == n_files else None)
             result["compile"] = compile_collection(
-                store, compile_parent, comp_id,
+                store, compile_parent, comp_id, max_per_ocid=hint,
                 extension_schemas=extension_schemas)
         elif fmt == detect.RECORD_PACKAGE:
             result["compile"] = compile_records(store, compile_parent, comp_id)
         else:
+            # compiled-release inputs are already compiled (reference
+            # compilable() never fires for this format)
             lifecycle.add_note(store, comp_id, "INFO",
                                "Collection is already compiled; compile step skipped")
     if "check" in steps and data_type:

@@ -40,15 +40,17 @@ PIPELINE_SQL = """
 
 @probe("ocds_compile_pipeline", PIPELINE_SQL, survey_ids="S1-S8,S10,C1,C3,C4,P1,P5,A2,A5,A6,J6,M3,M4,O2,O5")
 def ocds_compile_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _run_pipeline(spark, sf_dir, two_phase=False)
+    return _run_pipeline(spark, sf_dir)
 
 
 @probe("ocds_compile_two_phase", PIPELINE_SQL, survey_ids="C1,C3,skew-ext")
 def ocds_compile_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same pipeline through the two-phase partial merge (the hot-OCID
-    skew path, operators/merge_partial.py) — must produce the same
-    analyst answer as the single-phase probe."""
-    return _run_pipeline(spark, sf_dir, two_phase=True)
+    """The same pipeline and answer as ``ocds_compile_pipeline``: its
+    4,000 releases compile on the driver, where no two-phase merge
+    applies. Two-phase equality with the single-phase merge is pinned by
+    ``ocds_compile_skewed`` and, on the Spark path, by
+    tests/test_two_phase_merge.py under the ``spark_stages`` fixture."""
+    return _run_pipeline(spark, sf_dir)
 
 
 TENDER_VALUE_SQL = """
@@ -253,7 +255,7 @@ def _synth_order_packages(spark: SparkSession, sf_dir: str, n: int,
     return paths, tempfile.mkdtemp(prefix=prefix)
 
 
-def _run_pipeline(spark: SparkSession, sf_dir: str, two_phase: bool) -> DataFrame:
+def _run_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kingfisher_process_spark.pipeline import process_collection
     from kingfisher_process_spark.store import Store
 
@@ -261,8 +263,7 @@ def _run_pipeline(spark: SparkSession, sf_dir: str, two_phase: bool) -> DataFram
     store = Store(spark, f"{tmp}/store")
     result = process_collection(
         spark, store, "bench_orders", "2020-01-01 00:00:00", paths,
-        compile_=True, two_phase_compile=two_phase,
-    )
+        compile_=True)
     comp_id = result["collections"]["compiled"]
 
     crs = store.read("compiled_release").where(F.col("collection_id") == comp_id)

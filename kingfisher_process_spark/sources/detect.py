@@ -27,15 +27,19 @@ EMPTY_PACKAGE = "empty package"
 SUPPORTED_FORMATS = {RELEASE_PACKAGE, RECORD_PACKAGE, COMPILED_RELEASE}
 
 
-class UnknownFormatError(Exception):
+class FormatError(Exception):
+    """A file whose OCDS format cannot be loaded."""
+
+
+class UnknownFormatError(FormatError):
     pass
 
 
-class UnsupportedFormatError(Exception):
+class UnsupportedFormatError(FormatError):
     pass
 
 
-class EmptyFormatError(Exception):
+class EmptyFormatError(FormatError):
     pass
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kingfisher_process_spark.operators import lifecycle
 from kingfisher_process_spark.sources.reader import item_rows
 from kingfisher_process_spark.store import Store, with_sequential_ids
 
@@ -195,8 +196,6 @@ def _store_items_driver(store: Store, collection_id: int, fmt: str,
     where ocid-less items sat), and notes. package_data strings are
     repeated per item, so their distinct pairs come from a separate tiny
     collect instead of inflating the main one."""
-    from datetime import datetime, timezone
-
     rows = parsed.select(
         "row_kind", "collection_file_id", "item_index", "ocid", "release_id",
         "release_date", "hash_md5", "package_hash", "data",
@@ -254,17 +253,10 @@ def _store_items_driver(store: Store, collection_id: int, fmt: str,
     store.append_rows(table, env)
     store.advance_next_id(table, base + acc)
 
-    if n_notes:
-        note_rows = [r for r in rows if r["row_kind"] == "note"]
-        note_rows.sort(key=lambda r: (r["collection_file_id"] or 0, r["note"] or ""))
-        nb = store.next_id("collection_note")
-        now = datetime.now(timezone.utc)
-        store.append_rows("collection_note", [
-            {"id": nb + i, "collection_id": collection_id, "note": r["note"],
-             "data": None, "stored_at": now, "code": r["note_code"]}
-            for i, r in enumerate(note_rows)
-        ])
-        store.advance_next_id("collection_note", nb + len(note_rows))
+    note_rows = [r for r in rows if r["row_kind"] == "note"]
+    note_rows.sort(key=lambda r: (r["collection_file_id"] or 0, r["note"] or ""))
+    lifecycle.add_notes(store, collection_id,
+                        [(r["note_code"], r["note"], None) for r in note_rows])
 
     return {"rows": len(env), "notes": n_notes, "max_per_ocid": max_per_ocid}
 
@@ -403,20 +395,14 @@ def store_items(store: Store, collection_id: int, fmt: str, parsed: DataFrame) -
         from kingfisher_process_spark.store import DRIVER_APPEND_MAX
 
         notes = parsed.where(F.col("row_kind") == "note")
-        nb = store.next_id("collection_note")
         if n_notes <= DRIVER_APPEND_MAX:
-            from datetime import datetime, timezone
-
             note_rows = notes.select("collection_file_id", "note_code", "note").collect()
             # same deterministic order the distributed path sorts by
             note_rows.sort(key=lambda r: (r["collection_file_id"] or 0, r["note"] or ""))
-            now = datetime.now(timezone.utc)
-            store.append_rows("collection_note", [
-                {"id": nb + i, "collection_id": collection_id, "note": r["note"],
-                 "data": None, "stored_at": now, "code": r["note_code"]}
-                for i, r in enumerate(note_rows)
-            ])
+            lifecycle.add_notes(store, collection_id,
+                                [(r["note_code"], r["note"], None) for r in note_rows])
         else:
+            nb = store.next_id("collection_note")
             noted, n_notes, pinned_n = with_sequential_ids(
                 notes, nb, order_by=["collection_file_id", "note"],
                 mode="hash", n_parts=np_)
@@ -429,6 +415,6 @@ def store_items(store: Store, collection_id: int, fmt: str, parsed: DataFrame) -
                 F.col("note_code").alias("code"),
             ))
             pinned_n.unpersist()
-        store.advance_next_id("collection_note", nb + n_notes)
+            store.advance_next_id("collection_note", nb + n_notes)
     parsed.unpersist()
     return {"rows": n_rows, "notes": n_notes, "max_per_ocid": max_per_ocid}

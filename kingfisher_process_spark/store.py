@@ -228,15 +228,20 @@ class Store:
             # narrow OCID probes — compile/check read "all rows of one
             # OCID" and skip row groups whose ocid range can't match
             out = out.sortWithinPartitions("ocid")
-        # micros (not the INT96 default) so Spark- and pyarrow-written files
-        # in one metadata dir carry the same parquet timestamp type
-        self.spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        writer = out.write.mode(mode)
-        if table in PARTITIONED_BY_COLLECTION:
-            writer = writer.partitionBy("collection_id")
-        writer.parquet(self.path(table))
+        self._write_parquet(table, out, mode, self.path(table))
         # id watermark now unknown unless the writer advances it explicitly
         self._next_ids.pop(table, None)
+
+    def _write_parquet(self, table: str, df: DataFrame, mode: str, path: str) -> None:
+        """The one Spark parquet writer: hive-partitioned by collection
+        where the table is, timestamps as micros (not the INT96 default)
+        so Spark- and pyarrow-written files in one dir carry the same
+        parquet timestamp type."""
+        self.spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        writer = df.write.mode(mode)
+        if table in PARTITIONED_BY_COLLECTION:
+            writer = writer.partitionBy("collection_id")
+        writer.parquet(path)
 
     # -- driver-side fast path for METADATA_TABLES ------------------------
 
@@ -468,11 +473,7 @@ class Store:
 
         tmp = self.path(table) + "__merge"
         shutil.rmtree(tmp, ignore_errors=True)
-        self.spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        writer = out.write.mode("overwrite")
-        if touched is not None:
-            writer = writer.partitionBy("collection_id")
-        writer.parquet(tmp)
+        self._write_parquet(table, out, "overwrite", tmp)
 
         if touched is not None:
             for cid in touched:
@@ -545,11 +546,7 @@ class Store:
             out = out.sortWithinPartitions("ocid")
         tmp = src + "__compact"
         shutil.rmtree(tmp, ignore_errors=True)
-        self.spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        writer = out.write.mode("overwrite")
-        if table in PARTITIONED_BY_COLLECTION:
-            writer = writer.partitionBy("collection_id")
-        writer.parquet(tmp)
+        self._write_parquet(table, out, "overwrite", tmp)
         self._swap_in(tmp, src)
         self._next_ids.pop(table, None)
         return sum(1 for root, _d, files in os.walk(src)

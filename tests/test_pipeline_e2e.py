@@ -522,3 +522,79 @@ def test_api_add_files_load_at_http_close(spark, store, tmp_path):
     api.cancel_collection(store, ids2["root"])
     with pytest.raises(api.ApiError):
         api.add_files(store, ids2["root"], [p])
+
+
+def test_one_shot_closes_the_upgraded_collection(spark, store, tmp_path):
+    """The one-shot call closes the upgraded child as open → close does:
+    ``store_end_at`` set and ``expected_files_count`` = files loaded."""
+    from kingfisher_process_spark.pipeline import (
+        close_and_process, open_collection)
+
+    paths = [write(tmp_path, "u1.json", release_package([RELEASES[0]])),
+             write(tmp_path, "u2.json", release_package([RELEASES[2]]))]
+    one = process_collection(spark, store, "oneshot_up", "2020-01-01 00:00:00",
+                             paths, upgrade=True)
+    opened = open_collection(spark, store, "open_up", "2020-01-01 00:00:00",
+                             paths, upgrade=True)
+    close_and_process(spark, store, opened["collections"]["root"])
+
+    colls = {c["id"]: c for c in store.read_rows("collection")}
+    for ids in (one["collections"], opened["collections"]):
+        upg = colls[ids["upgraded"]]
+        assert upg["store_end_at"] is not None
+        assert upg["expected_files_count"] == len(paths)
+        assert upg["completed_at"] is not None
+
+
+def test_compile_hint_only_when_the_close_drains_every_file(
+        spark, store, tmp_path, monkeypatch):
+    """``close_and_process`` passes the drain's releases-per-OCID bound
+    to the compile only when that drain loaded every file: the one-shot
+    call passes it, a close after an earlier wave passes None (the bound
+    would miss the earlier wave's rows)."""
+    from kingfisher_process_spark import pipeline
+
+    hints = []
+    real = pipeline.compile_collection
+
+    def spy(*args, **kwargs):
+        hints.append(kwargs.get("max_per_ocid"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "compile_collection", spy)
+    p1 = write(tmp_path, "h1.json", release_package(RELEASES[:2]))
+    p2 = write(tmp_path, "h2.json", release_package([RELEASES[2]]))
+
+    one = pipeline.process_collection(
+        spark, store, "hint_oneshot", "2020-01-01 00:00:00", [p1, p2],
+        upgrade=True, compile_=True)
+    assert one["upgrade"]["max_per_ocid"] == 2
+    assert hints == [2]
+
+    opened = pipeline.open_collection(
+        spark, store, "hint_open", "2020-01-01 00:00:00", [p1], compile_=True)
+    root = opened["collections"]["root"]
+    pipeline.register_files(spark, store, root, [p2])
+    out = pipeline.close_and_process(spark, store, root)
+    assert out["load"]["files"] == 1 and out["compile"]["compiled"] == 2
+    assert hints == [2, None]
+
+
+def test_add_notes_appends_in_the_callers_order(store):
+    """``lifecycle.add_notes`` gives consecutive ids in the given order,
+    one naive-UTC ``stored_at`` per batch, and continues after the
+    single-row ``add_note``."""
+    from datetime import datetime, timezone
+
+    lifecycle.add_note(store, 7, "INFO", "first")
+    assert lifecycle.add_notes(store, 7, [("WARNING", "b", None),
+                                          ("ERROR", "a", '{"k": 1}')]) == 2
+    assert lifecycle.add_notes(store, 7, []) == 0
+    rows = sorted(store.read_rows("collection_note"), key=lambda r: r["id"])
+    assert [(r["code"], r["note"], r["data"]) for r in rows] == [
+        ("INFO", "first", None), ("WARNING", "b", None), ("ERROR", "a", '{"k": 1}')]
+    assert [r["id"] for r in rows] == [1, 2, 3]
+    now = datetime.now(timezone.utc).replace(tzinfo=None)
+    assert rows[1]["stored_at"] == rows[2]["stored_at"]
+    assert all(r["stored_at"].tzinfo is None
+               and abs((now - r["stored_at"]).total_seconds()) < 60 for r in rows)
