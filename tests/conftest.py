@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+import shutil
 import sys
 from pathlib import Path
 
@@ -14,6 +16,41 @@ from kingfisher_process_spark.session import get_spark  # noqa: E402
 def spark():
     s = get_spark("kps-tests", cpus=8)
     yield s
+
+
+_BUILD_ROOT: list = []
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _build_template_root(tmp_path_factory):
+    _BUILD_ROOT[:] = [tmp_path_factory.mktemp("builds")]
+
+
+def reuse_builds(build, dir_key="index"):
+    """Wrap an index build ``build(spark, df, out_dir, **options) ->
+    audit`` (whose audit names ``out_dir`` under ``dir_key``) so it runs
+    once per distinct (input plan, options) in the test session. A build is
+    several seconds of Spark jobs and deterministic in its input, and
+    most tests of one index start from the same few builds; a repeat
+    build into a new directory gets a copy of the first one's files and
+    its audit. A build into an existing directory always runs: it
+    re-initialises that index."""
+    seen: list[tuple] = []
+
+    def wrapped(spark, df, out_dir, **options):
+        if os.path.exists(out_dir):
+            return build(spark, df, out_dir, **options)
+        for first, opts, template, audit in seen:
+            if opts == options and first.sameSemantics(df):
+                shutil.copytree(template, out_dir)
+                return {**audit, dir_key: out_dir}
+        audit = build(spark, df, out_dir, **options)
+        template = str(_BUILD_ROOT[0] / f"{build.__name__}-{len(seen)}")
+        shutil.copytree(out_dir, template)
+        seen.append((df, dict(options), template, dict(audit)))
+        return audit
+
+    return wrapped
 
 
 @pytest.fixture()
@@ -49,8 +86,6 @@ def pytest_collection_modifyitems(config, items):
     items.sort(key=lambda it: tier.get(Path(str(it.fspath)).name,
                                        len(_EARLY_FILES)))
 
-
-import os  # noqa: E402
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("SPARK_GRAFT_SF_DIR_ORACLE", "/root/testdata/sf0.01")

@@ -9,12 +9,15 @@ import re
 
 from pyspark.sql import functions as F
 
+from kingfisher_process_spark.functions import ann_index as _ann
 from kingfisher_process_spark.functions.ann_index import (
-    build_index, load_model, query_index)
+    load_model, query_index)
 from kingfisher_process_spark.functions.similarity import (
     N_QUERIES, ann_ivfpq_residual_topk)
 from kingfisher_process_spark.plans.base import load_tables
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, reuse_builds
+
+build_index = reuse_builds(_ann.build_index)
 
 
 def test_index_serving_matches_in_plan_probe_and_prunes(spark, tmp_path):

@@ -9,16 +9,20 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from kingfisher_process_spark.functions import lsh_store as _lsh
 from kingfisher_process_spark.functions.lsh_store import (
     _BUCKETS_SCHEMA, _buckets_dir, _pairs_dir, _staged_pairs,
-    build_lsh_store, compact_lsh_store, load_lsh_manifest,
-    query_lsh_pairs, upsert_lsh_store)
+    compact_lsh_store, load_lsh_manifest, query_lsh_pairs,
+    upsert_lsh_store)
 from kingfisher_process_spark.plans.base import load_tables
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, reuse_builds
+
+build_lsh_store = reuse_builds(_lsh.build_lsh_store, dir_key="store")
 
 
 def _docs(spark):
@@ -280,6 +284,9 @@ def test_curate_incremental_near_dedup(spark, tmp_path):
         spark, a, str(tmp_path / "out_a"),
         near_dedup=True, lsh_store=store)
     assert audit_a["n_kept"] > 0
+    # the batch-1 history, for the precision-knob arm below
+    store2 = str(tmp_path / "lsh2")
+    shutil.copytree(store, store2)
 
     # one curated batch-1 survivor, re-id'd into batch 2
     kept_a = spark.read.parquet(str(tmp_path / "out_a") + "/corpus")
@@ -304,9 +311,6 @@ def test_curate_incremental_near_dedup(spark, tmp_path):
 
     # history_bands above N_BANDS: no history match can qualify, so
     # the byte-identical dup survives — the precision knob is live
-    store2 = str(tmp_path / "lsh2")
-    curate_corpus(spark, a, str(tmp_path / "out_a2"),
-                  near_dedup=True, lsh_store=store2)
     from kingfisher_process_spark.functions.dedup import N_BANDS
     audit_hb = curate_corpus(
         spark, b2, str(tmp_path / "out_hb"),
@@ -335,6 +339,10 @@ def test_history_bands_default_drop_rule(spark, tmp_path):
     store = str(tmp_path / "lsh")
     curate_corpus(spark, docs, str(tmp_path / "out_seed"),
                   near_dedup=True, lsh_store=store)
+    # one copy of the seeded history per arm below (the mutant must
+    # probe the same seeded history each time)
+    for tag in ("default", "above"):
+        shutil.copytree(store, str(tmp_path / f"lsh_{tag}"))
 
     # mutate one curated survivor: sweep replacement density until a
     # mutant shares 1..3 bands with its parent — similar enough to
@@ -364,13 +372,10 @@ def test_history_bands_default_drop_rule(spark, tmp_path):
     mut_df = spark.createDataFrame(
         [(9_000_000, mutated, "en", "t")],
         "doc_id long, text string, lang string, source string")
-    # fresh store per arm (the mutant must probe the same seeded
-    # history each time); hb=None exercises the measured DEFAULT of 1
+    # hb=None exercises the measured DEFAULT of 1
     for tag, hb, want_drop in (("default", None, True),
                                ("above", shared + 1, False)):
         st = str(tmp_path / f"lsh_{tag}")
-        curate_corpus(spark, docs, str(tmp_path / f"out_seed_{tag}"),
-                      near_dedup=True, lsh_store=st)
         kwargs = {} if hb is None else {"history_bands": hb}
         audit = curate_corpus(
             spark, mut_df, str(tmp_path / f"out_{tag}"),

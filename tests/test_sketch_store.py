@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -178,11 +179,10 @@ def test_upsert_equals_build_then_merge(spark, tmp_path):
     live = str(tmp_path / "live")
     build_sketches(spark, old, live, key_cols=["o_custkey"],
                    value_cols=["o_totalprice"], bounds=bounds)
+    base, bdir, merged = (str(tmp_path / x) for x in ("base", "b", "m"))
+    shutil.copytree(live, base)  # the same build of `old`
     man_up = upsert_sketches(spark, batch, live)
 
-    base, bdir, merged = (str(tmp_path / x) for x in ("base", "b", "m"))
-    build_sketches(spark, old, base, key_cols=["o_custkey"],
-                   value_cols=["o_totalprice"], bounds=bounds)
     build_sketches(spark, batch, bdir, key_cols=["o_custkey"],
                    value_cols=["o_totalprice"], bounds=bounds)
     man_merge = merge_sketch_dirs(spark, [base, bdir], merged)
@@ -200,8 +200,6 @@ def test_upsert_crash_recovery(spark, tmp_path):
     """A stage WITHOUT a manifest (crash mid-build) is discarded; a
     stage WITH one (crash mid-commit) is finished — either way the next
     upsert converges on the same final state."""
-    import shutil
-
     from kingfisher_process_spark.functions.sketch_store import (
         _staged_dir, load_manifest, upsert_sketches)
 

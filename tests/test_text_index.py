@@ -13,11 +13,14 @@ import shutil
 from pyspark.sql import functions as F
 
 from kingfisher_process_spark.functions.text import BM25_QUERY, t_bm25_search
+from kingfisher_process_spark.functions import text_index as _tix
 from kingfisher_process_spark.functions.text_index import (
-    build_text_index, compact_text_index, delete_text_index, load_stats,
+    compact_text_index, delete_text_index, load_stats,
     query_text_index, upsert_text_index)
 from kingfisher_process_spark.plans.base import load_tables
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, reuse_builds
+
+build_text_index = reuse_builds(_tix.build_text_index)
 
 
 def _docs(spark):
